@@ -204,14 +204,13 @@ def jaccard_verify(
 
     ``cand`` must have (doc_a, doc_b) with doc_a < doc_b.
 
-    Storage bound (ADVICE r12): the pinned per-doc array frame is
-    restricted to docs that actually appear in ``cand`` (one left-semi
-    join against the distinct union of both pair sides) BEFORE the
-    collect_list + localCheckpoint — so the materialized state is
-    O(candidate docs), not corpus-sized, and a small candidate set
-    cannot exhaust executor memory/disk at scale just because the
-    corpus is huge. Results are unchanged: docs outside ``cand`` could
-    never survive the inner joins below anyway.
+    Size bound (ADVICE r12): the per-doc array frame is restricted to
+    docs that actually appear in ``cand`` (one left-semi join against
+    the distinct union of both pair sides) BEFORE the collect_list —
+    so the arrays built are O(candidate docs), not corpus-sized, and
+    a small candidate set never pays for arrays of the whole corpus.
+    Results are unchanged: docs outside ``cand`` could never survive
+    the inner joins below anyway.
 
     Contract: ``min_sim`` must be > 0 (enforced below). The
     pre-array-form of this operator inner-joined on the shingle
@@ -233,7 +232,6 @@ def jaccard_verify(
         sh.join(cand_docs, id_col, "left_semi")
         .groupBy(id_col)
         .agg(F.collect_list("shingle").alias("_sh"))
-        .localCheckpoint(eager=False)
     )
     aa = arr.select(
         F.col(id_col).alias("doc_a"),
@@ -330,10 +328,9 @@ def connected_components(
     default rather than by caller discipline.
     """
     # Mirror each pair into both directions with one explode — a
-    # single narrow pass, so the upstream (LSH) subtree executes
-    # exactly once and only ONE materialization is needed. No
-    # distinct(): candidate pairs are distinct with left < right, so
-    # the mirrored set is distinct by construction.
+    # single narrow pass. No distinct(): candidate pairs are distinct
+    # with left < right, so the mirrored set is distinct by
+    # construction.
     s, d = F.col(left).cast("long"), F.col(right).cast("long")
     edges = (
         pairs.select(
@@ -345,7 +342,6 @@ def connected_components(
             ).alias("_e")
         )
         .select("_e.s", "_e.d")
-        .localCheckpoint(eager=True)
     )
     # Initialize at min(self, neighbors): the first propagation round
     # folded into the init aggregation — one fewer loop iteration
@@ -443,10 +439,8 @@ def alternating_star_components(
     from pyspark.sql.window import Window
 
     u, v = F.col(left).cast("long"), F.col(right).cast("long")
-    e = (
-        pairs.select(u.alias("u"), v.alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .localCheckpoint(eager=True)
+    e = pairs.select(u.alias("u"), v.alias("v")).filter(
+        F.col("u") != F.col("v")
     )
     # m(u) = min over the represented neighborhood ∪ {u}, as a window
     # min partitioned by u (r12, guide §2.4): the former groupBy +

@@ -111,17 +111,6 @@ def enrich_dims(
     )
 
 
-def anti_join(fact: DataFrame, dim: DataFrame, cond) -> DataFrame:
-    """J2: report rows whose dimension key is unknown (the reference's
-    unknown-airport report)."""
-    return fact.join(F.broadcast(dim), cond, "left_anti")
-
-
-def semi_join(fact: DataFrame, dim: DataFrame, cond) -> DataFrame:
-    """J3: keep only rows whose dimension key exists."""
-    return fact.join(F.broadcast(dim), cond, "left_semi")
-
-
 def snapshot_diff(
     old: DataFrame,
     new: DataFrame,

@@ -61,14 +61,6 @@ def prefix_filtered_pairs(
     ``tau_den · inter >= tau_num · union``; ``jaccard`` is the
     floor-to-1e-6 rational value (cross-engine-stable rounding).
     """
-    # The item table feeds two plan legs (frequencies, prefix build);
-    # persist it once per invocation instead of re-deriving the explode
-    # from source per leg. persist, not localCheckpoint: the columnar
-    # cache write is ~2x cheaper than checkpoint materialization for
-    # this exploded-string frame (r13 A/B: 2.9 s vs 5.6 s cold), and
-    # cross-invocation reuse is impossible because the bench clears
-    # the CacheManager before every invocation (bench.py r13).
-    items = items.persist()
     freq = items.groupBy(item_col).agg(F.count(F.lit(1)).alias("_freq"))
     # One shuffle builds the rarity-ordered item array per id:
     # array_sort on (freq, item) structs IS the global frequency order,
@@ -83,7 +75,6 @@ def prefix_filtered_pairs(
                 F.collect_list(F.struct("_freq", item_col))
             ).alias("_a")
         )
-        .persist()  # prefix explode + both verify sides
     )
     # ceil(tau·n) in integers: ceil(a·n / b) = floor((a·n + b - 1)/b).
     n_items = F.size("_a")
@@ -220,26 +211,22 @@ def bm25_scores(
     r12 (guide §2.3 "aggregate before you shuffle"): ONE pass over the
     token stream — per-doc length and the per-term tfs come from a
     single conditional aggregation (the query term set is a compile-
-    time constant, so tf per term is a SUM(CASE) column), persisted
-    doc-sized; corpus count / total length / per-term document
+    time constant, so tf per term is a SUM(CASE) column), doc-sized;
+    corpus count / total length / per-term document
     frequencies are tiny re-aggregations of that frame. The former
     shape tokenized the corpus up to three times (dl leg ×2 consumers
     + the filtered tf leg) and shuffled tf for a doc-length join that
     the single frame now carries for free. Scores are bit-identical:
     same integer inputs, same IEEE expression tree.
     """
-    per_doc = (
-        tok_stream.groupBy(id_col)
-        .agg(
-            F.count(F.lit(1)).alias("_dl"),
-            *[
-                F.sum(
-                    F.when(F.col(token_col) == t, 1).otherwise(0)
-                ).alias(f"_tf_{i}")
-                for i, t in enumerate(terms)
-            ],
-        )
-        .persist()
+    per_doc = tok_stream.groupBy(id_col).agg(
+        F.count(F.lit(1)).alias("_dl"),
+        *[
+            F.sum(F.when(F.col(token_col) == t, 1).otherwise(0)).alias(
+                f"_tf_{i}"
+            )
+            for i, t in enumerate(terms)
+        ],
     )
     stats = per_doc.agg(
         F.count(F.lit(1)).alias("_n_docs"),

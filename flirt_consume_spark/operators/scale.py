@@ -81,93 +81,6 @@ def fan_out(df: DataFrame, min_tasks: int | None = None) -> DataFrame:
     return df
 
 
-def _sample_safe(df: DataFrame, pin: bool = False) -> DataFrame:
-    """Input guard for the range-partitioned operators (r12 session 5,
-    r13 opt-in).
-
-    ``repartitionByRange`` runs a SAMPLING job over its child before
-    the shuffle — a full extra execution of the upstream subtree.
-    Locally that cost is hidden: the ``fan_out`` floor fires and the
-    sampler reuses the floor shuffle's map output. At the 100-TB
-    design point the floor is a no-op, so an unpinned child is
-    computed TWICE.
-
-    ``pin`` (r13, ADVICE r12): paying for that recompute with an
-    input-sized localCheckpoint is only a good trade when the child
-    is COMPUTE-HEAVY (pack_sequences' regex tokenizer,
-    quota_budget_select's quality scorer — measured 1.23 s -> 1.01 s
-    at sf0.1 with the fan_out floor disabled to reproduce the scale
-    shape). For a plain scan-projection child the pin materializes a
-    data-sized frame to executor memory+disk — with non-resilient
-    lineage — to save one cheap re-read, so the default is now
-    pin=False (the sampler re-reads the source) and the heavy callers
-    opt in via the operators' ``pin_sample`` parameter. Local plans
-    are unchanged either way (the pin only appears when the floor
-    does not fire). Lazy and per-invocation: no cross-run reuse."""
-    fanned = fan_out(df)
-    if fanned is df and pin:
-        return df.localCheckpoint(eager=False)
-    return fanned
-
-
-def plan_size_bytes(df: DataFrame) -> int | None:
-    """Optimizer static size estimate of ``df`` (bytes), or None when
-    unavailable. Same probe as ``fan_out`` — one analyzer/optimizer
-    pass, never executes anything."""
-    try:
-        return int(
-            str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        )
-    except Exception:  # noqa: BLE001 — estimate unavailable
-        return None
-
-
-def broadcast_if_small(
-    df: DataFrame,
-    probe: DataFrame | None = None,
-    threshold: int | None = None,
-    probe_bytes: int | None = None,
-) -> DataFrame:
-    """Static-size-gated broadcast hint (guide §3.1; ADVICE r12).
-
-    A forced ``F.broadcast(df)`` on a frame that is only small at TEST
-    scale is a scale-killer: at the 100-TB design point collecting and
-    shipping a data-sized frame exceeds Spark's 8 GB / 512M-row
-    broadcast cap and the driver's memory, aborting the job. But
-    dropping the hint entirely can cost the local plan a sort-merge
-    join, because size ESTIMATES above a distinct/aggregate are often
-    wildly conservative. This helper gates the hint on a STATIC size
-    probe (the fan_out pattern): hint only when the optimizer's
-    estimate of ``probe`` — a frame whose size provably bounds
-    ``df``'s true size, e.g. the pre-distinct column-pruned scan under
-    a DISTINCT key set (default: ``df`` itself) — is under
-    ``threshold``. At test scale the probe is tiny and the hint fires;
-    at the design point the probe is data-sized and the planner (and
-    AQE, from runtime stats) chooses freely — typically a shuffle
-    join that actually completes.
-
-    ``threshold`` defaults to 8 × autoBroadcastJoinThreshold (80 MB at
-    the default 10 MB): the probe bound is RAW column bytes, an upper
-    bound on the deduplicated build side, and a high-tens-of-MB hash
-    relation is comfortably inside executor memory (guide §3.1: "a few
-    hundred MB is usually fine").
-    """
-    spark = df.sparkSession
-    if threshold is None:
-        auto = _auto_broadcast_bytes(spark)
-        if auto <= 0:  # broadcast disabled for the session: never hint
-            return df
-        threshold = 8 * auto
-    size = (
-        probe_bytes
-        if probe_bytes is not None
-        else plan_size_bytes(probe if probe is not None else df)
-    )
-    if size is not None and size < threshold:
-        return F.broadcast(df)
-    return df
-
-
 def _auto_broadcast_bytes(spark: SparkSession) -> int:
     """autoBroadcastJoinThreshold in bytes; <= 0 means disabled.
     The conf accepts plain ints (incl. -1 = disabled) and byte-suffix
@@ -204,8 +117,11 @@ def semi_prune_if_large(
     the extra semi-join operators cost more than the cut saves when
     AQE already broadcasts everything), so it is gated on the same
     static size probe as ``fan_out``: engage only when ``big``'s
-    optimizer estimate exceeds ``threshold`` (default
-    8 × autoBroadcastJoinThreshold, the broadcast_if_small bound).
+    optimizer estimate (or ``probe_bytes``, e.g. the on-disk table
+    size) exceeds ``threshold`` (default 8 × autoBroadcastJoinThreshold:
+    the raw-bytes bound under which a hash relation comfortably fits
+    executor memory, guide §3.1). A session with broadcasts disabled
+    never prunes, since the prune is a forced broadcast.
     Below the gate the plan is byte-identical to the ungated one.
 
     ``keys`` must be a BOUNDED frame (it is broadcast), and the prune
@@ -215,9 +131,24 @@ def semi_prune_if_large(
     """
     spark = big.sparkSession
     if threshold is None:
-        threshold = 8 * max(_auto_broadcast_bytes(spark), 0)
-    size = probe_bytes if probe_bytes is not None else plan_size_bytes(big)
-    if size is not None and size > threshold:
+        auto = _auto_broadcast_bytes(spark)
+        if auto <= 0:  # broadcast disabled for the session: never hint
+            return big
+        threshold = 8 * auto
+    size = probe_bytes
+    if size is None:
+        try:
+            size = int(
+                str(
+                    big._jdf.queryExecution()
+                    .optimizedPlan()
+                    .stats()
+                    .sizeInBytes()
+                )
+            )
+        except Exception:  # noqa: BLE001 — estimate unavailable
+            return big
+    if size > threshold:
         return big.join(F.broadcast(keys), on, "left_semi")
     return big
 
@@ -518,7 +449,15 @@ def _pin_ranged(ranged: DataFrame) -> DataFrame:
     concurrent stages), all legs read the same frozen partitions, the
     ContextCleaner reclaims the blocks when the RDD is unreferenced,
     and a lost block fails the job loudly rather than recomputing a
-    possibly-different layout."""
+    possibly-different layout.
+
+    ``pin_sample`` (the range operators' opt-in) is a second, separate
+    pin BELOW the range shuffle: ``repartitionByRange`` runs a
+    sampling job over its child, a full extra execution of the
+    upstream subtree. A COMPUTE-HEAVY child (pack_sequences' regex
+    tokenizer, quota_budget_select's quality scorer) is cheaper to
+    materialize once; a plain scan projection is cheaper to re-read,
+    so the default is off."""
     return ranged.localCheckpoint(eager=False)
 
 
@@ -557,10 +496,9 @@ def global_rank(
     order (full unique key — ties would make any global rank
     nondeterministic anyway).
     """
-    # Parallelism floor before the range shuffle (no-op at scale) +
-    # opt-in sampling-pass pin when the floor does not fire (guide
-    # §2.5 / _sample_safe).
-    df = _sample_safe(df, pin=pin_sample)
+    # pin_sample: see _pin_ranged.
+    if pin_sample:
+        df = df.localCheckpoint(eager=False)
     ranged = _pin_ranged(
         df.repartitionByRange(*order_cols)
         .sortWithinPartitions(*order_cols)
@@ -671,10 +609,9 @@ def global_cumsum(
                 f"global_cumsum needs an integral value column, got "
                 f"{vc}: {vt} — float prefix sums are order-dependent"
             )
-    # Parallelism floor before the range shuffle (no-op at scale) +
-    # opt-in sampling-pass pin when the floor does not fire (guide
-    # §2.5 / _sample_safe).
-    df = _sample_safe(df, pin=pin_sample)
+    # pin_sample: see _pin_ranged.
+    if pin_sample:
+        df = df.localCheckpoint(eager=False)
     ranged = _pin_ranged(
         df.repartitionByRange(*order_cols)
         .sortWithinPartitions(*order_cols)
@@ -833,8 +770,6 @@ def local_topk_per_group(
     layout for both (see ``_pin_ranged``).
     """
     gnames = [df.select(c).columns[0] for c in group_cols]
-    df = fan_out(df)  # parallelism floor: the local sort+filter is
-    # otherwise serial over an unsplittable single-task scan
     s = (
         df.sortWithinPartitions(*group_cols, *order_cols)
         .withColumn("_pid", F.spark_partition_id())
@@ -906,8 +841,9 @@ def grouped_rank(
     """
     gcols = [F.col(c) if isinstance(c, str) else c for c in group_cols]
     gnames = [df.select(c).columns[0] for c in gcols]
-    # floor + opt-in sampling-pass pin (see _sample_safe)
-    df = _sample_safe(df, pin=pin_sample)
+    # pin_sample: see _pin_ranged.
+    if pin_sample:
+        df = df.localCheckpoint(eager=False)
     ranged = _pin_ranged(
         df.repartitionByRange(*(gcols + list(order_cols)))
         .sortWithinPartitions(*(gcols + list(order_cols)))
@@ -1214,9 +1150,9 @@ def bucketized_weighted_quantile(
     a bounded window (each group's reducer holds ≤ |buckets| rows
     however large the table). The first bucket whose cumulative
     weight crosses the quantile is exact by monotonicity. Level 2
-    broadcast-prunes the PINNED per-(group, value) weight frame (r13:
-    both levels derive from ONE fact aggregation — the former second
-    fact scan is gone) to that one bucket per group — a width-bounded
+    broadcast-prunes the per-(group, value) weight frame (unpinned:
+    both levels derive from ONE fact aggregation, which exchange reuse
+    shares between them) to that one bucket per group — a width-bounded
     sliver — and resolves the exact value with one more bounded
     window.
 

@@ -156,12 +156,8 @@ def lsh_buckets(
 ) -> DataFrame:
     """Bucket id = 8 sign bits of plane projections. explode(vector) ×
     broadcast(planes) → one partial-aggregated sum per (vec, plane):
-    a single shuffle keyed on vec id. ``fan_out`` (r12) floors the
-    explode/projection stage's parallelism over an unsplittable
-    single-task scan; no-op at real scale."""
-    from flirt_consume_spark.operators.scale import fan_out
-
-    comp = fan_out(emb.select(F.col(id_col), F.col(vec_col))).select(
+    a single shuffle keyed on vec id."""
+    comp = emb.select(
         F.col(id_col), F.posexplode(as_double(vec_col)).alias("d", "x")
     )
     proj = (
@@ -256,7 +252,7 @@ def embed_dup_pairs(
     its vector through BOTH sides of the bucket shuffle. The prune is
     one hash agg + join over the NARROW (id, bucket) frame, never the
     vectors, but it reads ``buckets`` a second time — so enable it
-    when the bucket frame is cheap to re-read (persisted k-means
+    when the bucket frame is cheap to re-read (checkpointed k-means
     cells, the llm_semdedup path) or when blocking is fine enough
     that singleton traffic dominates; with an UNPERSISTED derived
     bucket frame (the default LSH hashing) the rehash can cost more

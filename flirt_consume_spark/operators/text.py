@@ -125,14 +125,9 @@ def repetition_signal(
     element filtering the full gram array — was O(n·distinct) per
     doc, quadratic for low-repetition text; the run fold computes the
     identical integer counts. r12, guide §1.2 per-task work.)
-    ``fan_out`` floors the stage's parallelism when the input scan is
-    an unsplittable file (guide §2.5); at real scale it is a no-op.
     Rational count-ratios are floored to 1e-6 units (exact
     cross-engine; round() would tie-break differently)."""
-    from flirt_consume_spark.operators.scale import fan_out
-
-    base = fan_out(docs.select(F.col(id_col), F.col(text_col)))
-    step = base.select(
+    step = docs.select(
         F.col(id_col), tokens(text_col).alias("_tok")
     ).filter(F.size("_tok") >= 2)
     g = step.select(F.col(id_col), shingles("_tok", 2).alias("_g"))
@@ -169,9 +164,3 @@ def repetition_signal(
         ).alias("top_gram_frac"),
     )
 
-
-def min_fingerprint(doc_shingles: Column) -> Column:
-    """Winnowing-style document fingerprint: the minimum md5 over the
-    shingle set (k=1 min-sketch). Two documents sharing it almost
-    surely share their rarest shingle — a cheap first-pass cluster key."""
-    return F.array_min(F.transform(doc_shingles, lambda s: F.md5(s)))

@@ -41,82 +41,13 @@ from flirt_consume_spark.queries import hopping  # noqa: F401,E402
 
 # --- driver-window rotation ----------------------------------------------
 # External verifiers sample REGISTRY in insertion order with a bounded
-# window of 50 keys per round. Rotation plan (updated each round):
-#   round 6: the 35 keys never driver-checked as of round 5 + 15 stale
-#     r3-vintage keys whose code changed since their last driver row.
-#     Outcome (CORRECTNESS_r06.json): all 50 green.
-#   round 7: the first 50 (registry order) of the 94 round-6 additions
-#     that still had zero driver rows, graph_assortativity promoted to
-#     slot 1 (sf0.1 overflow fix needed a driver row on fixed code).
-#     Outcome (CORRECTNESS_r07.json): all 50 green.
-#   round 8: the final 44 keys that had never had a driver row, then
-#     6 stale-backfill slots (percentile-family rewrites + decimal
-#     widenings + the 3 stalest r3 rows).
-#     Outcome (CORRECTNESS_r08.json): all 50 green — every registry
-#     key now has externally-recorded driver evidence at least once.
-#   round 9: with zero never-checked keys left, rotation
-#     becomes pure staleness refresh. Slot 1: agg_weighted_median —
-#     its underlying operator (scale.bucketized_weighted_quantile)
-#     changed THIS round (ADVICE-r8 NULL-skip fix), so its r7 driver
-#     row predates the live code. Slots 2-5: the four r4-vintage keys
-#     whose query function was REWRITTEN after their last driver row
-#     (win_rank -> ranking_family r7, join_similarity -> banded-LSH
-#     r6, sink_upsert r6, pack_sequences r6; found by git log -L over
-#     each registered function's line range). Then the 24 r3-vintage
-#     keys (the stalest rows in the registry), then the stalest
-#     r4-vintage keys in registry order.
-#     Mid-round update: the degenerate-input sweep (tools/
-#     edge_sweep.py) changed four more functions (llm_bpe_train
-#     early-stop, agg_histogram min==max guard + oracle CASE,
-#     join_dpp / scan_partitioned schema'd read-back; sink_upsert
-#     likewise but it was already listed) — promoted to slots 2-5 so
-#     their driver rows land on the live code; the 4 least-stale
-#     r4-vintage tail keys rotate out to keep the window at 50.
-#     Outcome (CORRECTNESS_r09.json): all 50 green.
-#   round 10 (this list): pure staleness refresh, per VERDICT r9 task
-#     2. Front slots: keys whose code (or whose underlying operator /
-#     oracle text) changes THIS round — promoted as changes land so
-#     their driver rows record the live code. Then the 15 r3-vintage
-#     keys (the registry's stalest external evidence), then the
-#     stalest r4-vintage keys in staleness-list order. The five
-#     streaming-family r4 keys (stream_dedup / stream_session /
-#     stream_sliding / stream_static / stream_tumbling) yield their
-#     slots to the changed-this-round set: the family carries
-#     independent live-code evidence via the pytest stream==batch
-#     equivalence suite, so their driver rows are the least
-#     informative to refresh; they rotate first next round.
-#   round 12 (this list): staleness refresh per VERDICT r11 task 1,
-#     plus the round's one NEW key. Slot 1: emb_recall_planted — new
-#     this round (VERDICT r11 task 5), the registry's only key with
-#     no external row ever; leaving it unchecked would break the
-#     "every key has driver evidence" invariant, which outranks one
-#     extra r7 slot. Slot 2: llm_simpson — its query/oracle text
-#     changed this round (Σc² widened to decimal(38,0)/HUGEINT,
-#     VERDICT r11 task 4) AND it is r6-vintage. Slots 3-45: the
-#     remaining 43 r6-vintage keys (the registry's stalest external
-#     rows; alphabetical). Slots 46-50: the first five r7-vintage
-#     keys in registry order (scan_xml, sink_pyds, llm_semdedup,
-#     emb_recall_eval — fitting, as its planted sibling lands this
-#     round — and emb_pca_project). After this window: no key's
-#     latest external row predates round 7; 39 keys remain at r7 —
-#     one over the verdict's parenthetical ≤38 target, the explicit
-#     cost of the task-5 key's slot — they rotate through rounds
-#     13-14.
-#   round 13 (this list): keys whose INTERNALS changed this round
-#     lead (the optimization round restructured their plans — results
-#     are oracle-identical, but fresh external rows on the live code
-#     are worth the most): the one-pass weighted median, the
-#     hashed-candidate-key set-similarity join, the gated-broadcast
-#     FK audit, the gated-prune Q5/Q8 shapes, the session-scaled
-#     Python data source pair, the candidate-bounded Jaccard verify,
-#     the per-invocation LSH pair build and its component consumers,
-#     the salted semdedup pairing, and the fanned-out cross-split
-#     dedup. Then the r7-vintage staleness backlog (the registry's
-#     stalest external rows) in alphabetical order, minus stream_join
-#     / stream_outer (deferred to round 14: the stream==batch
-#     equivalence suite gives them independent live-code evidence, so
-#     their rows are the least informative to refresh — the r11
-#     precedent).
+# window of 50 keys per round, so the live window below is moved to the
+# front of REGISTRY. The round-13 window: keys whose internals the
+# round-13 optimization restructured lead (fresh external rows on the
+# live plans are worth the most), then the r7-vintage staleness backlog
+# in alphabetical order, minus stream_join / stream_outer (the
+# stream==batch equivalence suite gives them independent live-code
+# evidence). Earlier windows live in git history.
 _ROUND13_WINDOW = [
     # internals changed this round (r13 optimization):
     "agg_weighted_median", "join_setsim", "audit_fk",
@@ -140,132 +71,6 @@ _ROUND13_WINDOW = [
     "sql_min_cost", "sql_pivot", "sql_recursive", "sql_waiting_orders",
     "time_interpolate", "time_interval_merge", "time_workdays",
     "win_locf", "win_range_hour", "win_zscore",
-]
-
-# round-12 window kept for the record (CORRECTNESS_r12.json = 50/50
-# green on exactly this list); superseded by _ROUND13_WINDOW above.
-_ROUND12_WINDOW = [
-    # new this round (never externally checked):
-    "emb_recall_planted",
-    # changed this round (Σc² decimal widening) + r6-vintage:
-    "llm_simpson",
-    # r6-vintage staleness backfill — the complete remaining set:
-    "agg_abc", "agg_approx_distinct", "agg_approx_percentile",
-    "agg_bucketed", "agg_concurrency", "agg_distinct", "agg_pivot",
-    "agg_rollup", "agg_route", "alloc_remainder", "attribution_touch",
-    "audit_benford", "audit_fk", "audit_srm", "bm25_rank",
-    "dedup_rank", "emb_covariance", "emb_power_iteration",
-    "graph_ancestors", "join_asof", "join_enrich", "join_pointpoly",
-    "join_range", "join_setsim", "llm_collocations", "llm_dupspans",
-    "llm_winnow", "sample_weighted", "scan_variant", "scd2_history",
-    "set_union", "shape_market_share", "shape_product_profit",
-    "shape_volume_shipping", "temporal_align", "time_cusum",
-    "time_downsample", "time_seasonal", "topk", "udf_scalar_iter",
-    "win_drawdown", "win_rolling", "win_transitions",
-    # r7-vintage staleness backfill (first five in registry order):
-    "scan_xml", "sink_pyds", "llm_semdedup", "emb_recall_eval",
-    "emb_pca_project",
-]
-
-# round-11 window kept for the record (CORRECTNESS_r11.json = 50/50
-# green on exactly this list); superseded by _ROUND12_WINDOW above.
-#   round 11: pure staleness refresh per VERDICT r10 task
-#     1 — after this window lands, no key's latest external row
-#     predates round 6. Front slots: the keys whose query/oracle TEXT
-#     changed this round (win_bollinger + agg_ols decimal widenings;
-#     stream_tumbling/stream_sliding/stream_ohlc timezone-free oracle
-#     rewrites — the first two are also the r4-stalest rows). Then the
-#     remaining r4-vintage streaming keys (rotated out of round 10 by
-#     design, stalest in the registry), then ALL 42 r5-vintage keys.
-_ROUND11_WINDOW = [
-    # changed this round (oracle/query text):
-    "win_bollinger", "agg_ols",
-    "stream_tumbling", "stream_sliding", "stream_ohlc",
-    # r4-vintage staleness backfill (the streaming family)
-    "stream_dedup", "stream_session", "stream_static",
-    # r5-vintage staleness backfill — the complete set, registry order
-    "agg_bitmap_distinct", "agg_bitmap_intersect", "agg_grouping_sets",
-    "agg_mad_outliers", "agg_sketch_merge", "agg_time_weighted",
-    "cdc_apply", "cohort_retention", "emb_kmeans", "emb_quantize",
-    "graph_pagerank", "graph_triangles", "join_asof_nearest",
-    "join_bloom", "join_colocated", "join_geo", "llm_chunk",
-    "llm_contaminate", "llm_corpus_pipeline", "llm_dataset_card",
-    "llm_heavy_hitters", "llm_inverted_index", "llm_rarity",
-    "llm_tfidf", "pareto_frontier", "profile_table", "sample_mixture",
-    "scan_badrecords", "scan_evolve", "scan_orc", "scan_pyds",
-    "scd2_lookup", "sink_merge", "sink_zorder", "snapshot_diff",
-    "sql_exists", "time_gap_fill", "time_islands", "time_ohlc",
-    "udf_arrow", "win_ewma", "win_running_distinct",
-]
-
-# round-10 window kept for the record (CORRECTNESS_r10.json = 50/50
-# green on exactly this list); superseded by _ROUND11_WINDOW above.
-_ROUND10_WINDOW = [
-    # changed this round: tie-class fold in bucketized_weighted_quantile
-    # (VERDICT r9 task 7) re-plans agg_weighted_median; the nulls-mirror
-    # parity pass (task 4) touched these query/oracle texts.
-    "agg_weighted_median",
-    # r3-vintage staleness backfill (oldest rows in the registry)
-    "agg_collect", "array_ops", "geo_haversine", "join_asof_fwd",
-    "json_extract", "map_ops", "math_scalar", "set_diff",
-    "str_normalize", "str_regex", "time_bucket", "time_duration",
-    "time_normalize", "unpivot_long", "win_firstlast",
-    # r4-vintage staleness backfill
-    "agg_incremental", "dedup_components", "dedup_components_star",
-    "join_salted", "llm_editdist", "llm_exact_dedup",
-    "llm_fingerprint", "llm_knn", "llm_langid", "llm_minhash_dedup",
-    "llm_ngram_jaccard", "llm_quality", "llm_redact",
-    "llm_repetition", "llm_simhash", "llm_textstats", "llm_tokens",
-    "llm_vocab", "sample_stratified", "scan_csv", "scan_jsonl",
-    "shape_large_orders", "shape_local_supplier_volume",
-    "shape_order_priority", "shape_priority_shipping",
-    "shape_shipping_priority", "sink_compact", "split_assign",
-    "sql_distribution", "udf_geomean",
-    "udf_groupnorm", "udf_scalar", "win_lag", "win_sessionize",
-]
-
-# round-9 window kept for the record (CORRECTNESS_r09.json = 50/50
-# green on exactly this list); superseded by _ROUND10_WINDOW above.
-_OLD_ROUND9_WINDOW = [
-    "agg_weighted_median",
-    # changed this round by the degenerate-input sweep fixes
-    "agg_histogram", "llm_bpe_train", "join_dpp", "scan_partitioned",
-    # changed this round by the sweep's second wave (try_divide /
-    # try_element_at / NULL-slope parity on the statistics family)
-    "audit_ks", "agg_stats", "agg_cuped", "audit_mannwhitney",
-    "audit_ttest", "eval_auc", "eval_pr_curve", "agg_subsample_ci",
-    "time_theilsen",
-    # changed this round by the sweep's third wave (NULL payloads:
-    # pandas-kernel/UDTF NULL-in-NULL-out, try_element_at read-backs,
-    # all-NULL window frames)
-    "llm_multimodal", "scan_binary", "scan_text", "udtf_analyze",
-    "udtf_expand", "udtf_table_arg", "win_rolling_median",
-    # changed this round by the empty-mirror PARITY pass (funnel
-    # counts follow the COUNT(*)-is-0 convention, not SUM's NULL)
-    # and the shared-ECDF session cache
-    "funnel_steps", "win_pattern",
-    # changed this round by the nulls-mirror parity pass (NULL label
-    # = negative class; try_divide NULL-condition oracle) and the
-    # skew-mirror pass (constant-regressor OLS)
-    "eval_calibration", "scalar_try", "agg_ols",
-    # oracles rewritten this round (NULL-vector filters in the LSH /
-    # IVF / centroid SQL): the driver gate runs oracle_sql(), so
-    # these need fresh rows on the new text
-    "llm_ann_lsh", "llm_embed_dedup", "llm_ann_ivf", "llm_centroid",
-    # changed this round by the rank-family struct-key rework (every
-    # consumer of grouped_rank / grouped_cumsum / grouped_percentiles
-    # / bucketized_weighted_quantile re-plans through the null-safe
-    # join-backs; agg_weighted_median already leads the window)
-    "win_ntile", "win_cume", "win_distribution", "quota_per_source",
-    "agg_percentile", "agg_winsorize", "agg_gini",
-    "sample_systematic", "sort_global",
-    # r4 driver rows, function rewritten since (git log -L)
-    "win_rank", "join_similarity", "sink_upsert", "pack_sequences",
-    # r3-vintage staleness backfill (unchanged code, oldest rows
-    # first; the rest of the r3/r4 backlog rotates next round —
-    # changed-this-round keys take precedence for the 50 slots)
-    "filter_codeshare", "filter_predicates", "join_anti", "join_semi",
-    "join_outer", "agg_cube", "agg_conditional",
 ]
 
 

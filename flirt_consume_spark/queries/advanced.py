@@ -78,8 +78,8 @@ def join_geo(spark: SparkSession, sf_dir: str) -> DataFrame:
 # agg_winsorize's staged p05/p95 selection over
 # (orders.o_orderstatus, o_totalprice) — the rank and its ≤2-rows-per-
 # percentile-per-group bounds selection, built fresh PER INVOCATION
-# with a lazy pin on the tiny selection (no cross-invocation memo;
-# r13 — every bench/oracle run recomputes from parquet).
+# (no cross-invocation memo; r13 — every bench/oracle run recomputes
+# from parquet).
 def _orders_pct_selection(spark: SparkSession, sf_dir: str):
     from flirt_consume_spark.operators.scale import (
         percentile_selection,
@@ -94,7 +94,7 @@ def _orders_pct_selection(spark: SparkSession, sf_dir: str):
     )
     return percentile_selection(
         staged, ["o_orderstatus"], [0.05, 0.95], ["lo", "hi"]
-    ).localCheckpoint(eager=False)
+    )
 
 
 @query(
@@ -129,9 +129,8 @@ def agg_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     differ in the last ulp, so the hash match rests on the exact
     integer-cents aggregation, not a bit-identical quantile. The
     rank + rank-bounds selection (everything data-sized) is built
-    via ``stage_percentile_rank`` + ``percentile_selection`` with a
-    lazy per-invocation pin, so the range shuffle is paid once per
-    invocation (and nothing is memoised across runs)."""
+    via ``stage_percentile_rank`` + ``percentile_selection`` fresh
+    per invocation (nothing is memoised across runs)."""
     from flirt_consume_spark.operators.scale import (
         percentiles_from_selection,
     )
@@ -345,10 +344,11 @@ def scan_badrecords(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", "_corrupt_record")
         .csv(root + "/*.csv")
-        # corrupt-record column semantics: referencing it requires a
-        # materialization boundary (Spark disallows filtering the
-        # internal column directly on the scan); a lazy localCheckpoint
-        # is that boundary without a CacheManager entry
+        # Correctness boundary: without it CSV column pruning parses
+        # only the referenced columns, so a line corrupt only in
+        # o_orderkey (unused below) would count as good. The lazy
+        # localCheckpoint makes the scan parse every schema column
+        # (tests/test_advanced.py pins this).
         .localCheckpoint(eager=False)
     )
     bad = F.col("_corrupt_record").isNotNull()
@@ -434,14 +434,13 @@ def llm_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast offsets, never a per-source window) range-shuffles
     60-byte rows, and the bounded survivor set (≤ 150/source) is
     re-attached by a BROADCAST join — only survivors pay
-    tokenization, and no exchange ever carries text. ``fan_out``
-    floors the proxy scan's parallelism at the small end."""
+    tokenization, and no exchange ever carries text."""
     from flirt_consume_spark.operators import text as X
-    from flirt_consume_spark.operators.scale import fan_out, grouped_rank
+    from flirt_consume_spark.operators.scale import grouped_rank
 
     docs = t(spark, sf_dir, "documents")
     q6 = F.floor(X.quality_score("text") * 1e6) / F.lit(1e6)
-    base = fan_out(docs.select("doc_id", "source", "text")).select(
+    base = docs.select(
         "doc_id", "source", q6.alias("_q6"), F.md5("text").alias("_h")
     )
     f = base.filter(F.col("_q6") >= 0.5).select("doc_id", "source", "_h")
@@ -840,11 +839,8 @@ def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
         # r13 same-session ABAB (5 cleared reps each) measured 1.61 s
         # vs 1.81 s median for this key's narrow int frames.
         .localCheckpoint(eager=False)
-
     )
-    adj = e.groupBy("u").agg(
-        F.array_sort(F.collect_list("v")).alias("nbrs")
-    ).localCheckpoint(eager=False)
+    adj = e.groupBy("u").agg(F.array_sort(F.collect_list("v")).alias("nbrs"))
     au = adj.select(F.col("u").alias("_ju"), F.col("nbrs").alias("nu"))
     av = adj.select(F.col("u").alias("_jv"), F.col("nbrs").alias("nv"))
     tri = (
@@ -1087,13 +1083,13 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     # Degree is static across iterations: attach it to the edge list
-    # ONCE (a window over the same src partitioning — no extra join)
-    # and persist; each iteration then needs only edges ⋈ ranks.
+    # ONCE (a window over the same src partitioning — no extra join);
+    # each iteration then needs only edges ⋈ ranks.
     from pyspark.sql.window import Window
 
     e_deg = e.withColumn(
         "d", F.count(F.lit(1)).over(Window.partitionBy("src"))
-    ).persist()
+    )
     nodes = (
         e_deg.select(F.col("src").alias("node"))
         .union(e_deg.select(F.col("dst").alias("node")))
@@ -1218,8 +1214,8 @@ def emb_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _km_state(spark: SparkSession, sf_dir: str, k: int = 5):
     """Lloyd's loop shared by emb_kmeans (emits cluster summaries)
     and llm_semdedup (consumes the final assignment as its blocking
-    key). Returns (lazily pinned long-form vectors, final
-    (vec_id, cid) assignment). Runs fresh PER INVOCATION — the r12
+    key). Returns (long-form vectors, final (vec_id, cid)
+    assignment). Runs fresh PER INVOCATION — the r12
     session-scoped memo was cross-invocation result caching and was
     removed in r13. ``k`` is the SCALE KNOB for cluster-blocked
     consumers: per-cell pair work in llm_semdedup is ~N²/k, so k
@@ -1240,11 +1236,6 @@ def _km_state_build(spark: SparkSession, sf_dir: str, k: int):
             ),
         )
         .select("vec_id", F.col("pos"), F.col("col").alias("x"))
-        # Reused by every stage of every iteration (distance join,
-        # centroid update, checksum): persist once per invocation
-        # instead of re-exploding the parquet scan 5x (honest: the
-        # bench clears the CacheManager before every invocation).
-        .persist()
     )
     cents = vl.filter(F.col("vec_id") < k).select(
         F.col("vec_id").alias("cid"), "pos", F.col("x").alias("c")
@@ -1445,8 +1436,6 @@ def sink_pyds(spark: SparkSession, sf_dir: str) -> DataFrame:
         WriterCommitMessage,
     )
 
-    from flirt_consume_spark.operators import scale as _scale
-
     # Keyed on source fingerprint (distinct sf_dirs sharing a basename
     # get distinct dirs) AND application id (two concurrent sessions
     # never race on the same rmtree-then-write).
@@ -1519,23 +1508,6 @@ def sink_pyds(spark: SparkSession, sf_dir: str) -> DataFrame:
             "o_orderstatus",
             F.floor(F.col("o_totalprice") * 100).cast("long").alias("cents"),
         )
-        # Right-size the sink task count to the DATA, adaptively (r13:
-        # the former constant 4 was a local tuning knob): one writer
-        # per ~32 MB of estimated input, so the fixture volume still
-        # gets a handful of writers (each Python sink task costs a
-        # worker spin-up) while at scale the target exceeds the scan's
-        # partition count and coalesce becomes a no-op — one writer
-        # per scan task, guide §6 output sizing. coalesce (no
-        # shuffle), not repartition.
-        .transform(
-            lambda d: d.coalesce(
-                max(
-                    1,
-                    (_scale.plan_size_bytes(d) or 1) // (32 * 1024 * 1024)
-                    + 1,
-                )
-            )
-        )
         .write.format("jsonl_manifest_sink")
         .mode("append")
         .option("path", out_dir)
@@ -1552,9 +1524,9 @@ def sink_pyds(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # llm_semdedup's scored within-cell pair set: the |cell|² pairing +
 # 64-dim cosine is an expensive kernel whose output (the pairs that
-# clear the 0.3 cut) is small. Computed fresh PER INVOCATION with a
-# lazy pin — the r12 session cache was cross-invocation result
-# memoisation (VERDICT r12 "What's wrong" #1) and was removed.
+# clear the 0.3 cut) is small. Computed fresh PER INVOCATION — the
+# r12 session cache was cross-invocation result memoisation (VERDICT
+# r12 "What's wrong" #1) and was removed.
 def _semdedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flirt_consume_spark.operators import similarity as S
 
@@ -1575,7 +1547,7 @@ def _semdedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         salt_buckets=max(
             1, spark.sparkContext.defaultParallelism // k
         ),
-    ).localCheckpoint(eager=False)
+    )
 
 
 @query(
@@ -1632,11 +1604,8 @@ def llm_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     output shape match llm_embed_dedup (dup_id → lowest-id
     canonical). The 6-dp rounded cosine keeps the threshold cut
     ulp-stable across engines; at 100 TB the only data-sized stages
-    are the Lloyd's passes and ONE shuffle keyed on cell id. The
-    scored pair set — the pair kernel's output, tiny relative to the
-    pairing work that produced it — is pinned per invocation, so one
-    invocation's consumers pay the |cell|² pairing once (nothing is
-    memoised across runs)."""
+    are the Lloyd's passes and ONE shuffle keyed on cell id. Nothing
+    is memoised across runs."""
     pairs = _semdedup_pairs(spark, sf_dir)
     return pairs.groupBy(F.col("vec_b").alias("dup_id")).agg(
         F.min("vec_a").alias("canonical_id"),

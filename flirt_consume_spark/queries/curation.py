@@ -397,18 +397,10 @@ def audit_chisq(spark: SparkSession, sf_dir: str) -> DataFrame:
     joins of three constant-size marginal tables — the entire
     computation after the first agg touches O(cells) rows."""
     od = t(spark, sf_dir, "orders")
-    # Pin the O(cells) contingency table: its FOUR consumers (row
-    # marginals, column marginals, grand total, output join) each
-    # re-scanned orders and re-ran the aggregation (4 scans in the
-    # plan → 1; r12 session 5, guide §5). Lazy, per-invocation.
-    obs = (
-        od.groupBy(
-            F.col("o_orderpriority").alias("pri"),
-            F.col("o_orderstatus").alias("status"),
-        )
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_obs"))
-        .localCheckpoint(eager=False)
-    )
+    obs = od.groupBy(
+        F.col("o_orderpriority").alias("pri"),
+        F.col("o_orderstatus").alias("status"),
+    ).agg(F.count(F.lit(1)).cast("bigint").alias("n_obs"))
     rt = obs.groupBy("pri").agg(F.sum("n_obs").cast("bigint").alias("n_row"))
     ct = obs.groupBy("status").agg(
         F.sum("n_obs").cast("bigint").alias("n_col")
@@ -769,7 +761,7 @@ def _bpe_fit_build(spark: SparkSession, sf_dir: str):
                 F.lit(f"({best['a']})({best['b']})"),
                 F.lit(f"({best['a']}{best['b']})"),
             ),
-        ).localCheckpoint(eager=True)
+        )
     return merges, sym
 
 
@@ -1142,15 +1134,8 @@ def eval_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("lang").alias("actual"),
         F.when(ratio >= 0.1, "en").otherwise("unk").alias("predicted"),
     )
-    # Pin the O(classes²) cell table: its three consumers (row
-    # marginals, column marginals, output join) each re-scanned the
-    # corpus text and re-ran the stopword-ratio regex (3 scans in the
-    # plan → 1; the audit_chisq shape, r12 session 5). Lazy,
-    # per-invocation.
-    cells = (
-        pred.groupBy("actual", "predicted")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_cell"))
-        .localCheckpoint(eager=False)
+    cells = pred.groupBy("actual", "predicted").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_cell")
     )
     ra = cells.groupBy("actual").agg(
         F.sum("n_cell").cast("bigint").alias("n_actual")
@@ -1235,11 +1220,8 @@ def quota_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
         q.alias("quality"),
         F.length("text").cast("bigint").alias("n_chars"),
     ).withColumn("negq", -F.col("quality"))
-    # At real scale global_cumsum's internal _sample_safe pin keeps
-    # the range partitioner's sampling pass from re-running the
-    # regex-heavy quality projection (r12 session 5; measured
-    # 1.23 -> 1.01 s at sf0.1 with the fan_out floor disabled to
-    # reproduce the scale shape).
+    # pin_sample keeps the range partitioner's sampling pass from
+    # re-running the regex-heavy quality projection (r12 session 5).
     cum = global_cumsum(
         d, ["n_chars"], ["negq", "doc_id"], ["cum_chars"], pin_sample=True
     )
@@ -1549,9 +1531,8 @@ def anon_generalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     # projection (4 plan scans -> 1) measured SLOWER in the committed
     # A/B (0.80 vs 0.67 s solo median, plans/r13/readjudicate_*.json)
     # — the lattice levels are cheap scan+broadcast-join legs, so the
-    # pin's materialization costs more than the re-reads it saves (the
-    # same ruling as _sample_safe's opt-in pin). REVERTED to the
-    # unpinned r11 form.
+    # pin's materialization costs more than the re-reads it saves.
+    # REVERTED to the unpinned r11 form.
     c = cu.join(F.broadcast(na), "c_nationkey").select(
         "c_custkey",
         F.col("c_mktsegment").alias("seg"),

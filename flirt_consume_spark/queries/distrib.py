@@ -341,7 +341,7 @@ def graph_bfs_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle's recursion guard).
 
     Scale: per round the frontier joins the edge table on src (edges
-    partitioned once by the join key and cached), new nodes are
+    hash-partitioned by the join key), new nodes are
     discovered via LEFT ANTI against the visited set, and the
     convergence probe is an O(1) count — no collect of data. Rounds
     are bounded by the depth cap, not the data; frontier rows are
@@ -358,7 +358,6 @@ def graph_bfs_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         .repartition("src")
-        .persist()
     )
     nodes = parents.select("node").unionByName(
         spark.range(1).select(F.lit(0).cast("long").alias("node"))
@@ -366,16 +365,14 @@ def graph_bfs_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     seeds = nodes.filter(F.col("node") % _BFS_SEED_MOD == 0).select(
         "node", F.lit(0).cast("bigint").alias("dist")
     )
-    frontier = seeds.localCheckpoint(eager=True)
-    # visited = lazy UNION of the per-level checkpointed frontiers:
-    # each level is materialized exactly once (its own checkpoint);
-    # re-checkpointing the whole union every round re-wrote ALL
-    # visited rows per level — O(V · depth) total materialization for
-    # state that never changes after discovery (r12, guide §5
-    # localCheckpoint: cut lineage, don't re-copy data). The union of
-    # k checkpointed RDDs has depth-1 lineage, so the anti-join scans
-    # the same rows either way.
-    visited = frontier
+    # visited = lazy UNION of the seeds and the per-level checkpointed
+    # frontiers: each level is materialized exactly once (its own
+    # checkpoint); re-checkpointing the whole union every round
+    # re-wrote ALL visited rows per level — O(V · depth) total
+    # materialization for state that never changes after discovery
+    # (r12, guide §5 localCheckpoint: cut lineage, don't re-copy
+    # data).
+    frontier = visited = seeds
     for depth in range(1, _BFS_MAX_DEPTH + 1):
         candidates = (
             frontier.join(edges, frontier["node"] == edges["src"])
@@ -545,11 +542,7 @@ def agg_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     # once per raw event row, and the probe's exact counts reuse the
     # same shuffle instead of re-scanning events. Cells are identical:
     # the sketch is Σ over keys of their multiplicities either way.
-    user_counts = (
-        ev.groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .persist()
-    )
+    user_counts = ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("_n"))
     cells = cms_cells(user_counts, "user_id", _CMS_D, _CMS_W, weight="_n")
     probe = user_counts.filter(
         F.col("user_id") % _CMS_PROBE_MOD == 0
@@ -1032,7 +1025,7 @@ def time_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
     # duration) and the plan already collects it into one packed array
     # for the prefix product — so the at-risk prefix sums are computed
     # IN-ROW on that same sorted array instead of running the full
-    # global_cumsum machinery (fan_out + range shuffle + window +
+    # global_cumsum machinery (range shuffle + window +
     # offset broadcasts) plus a max-probe and cross join over a
     # few-hundred-row frame (r12 session 5). Integer adds in a fixed
     # left fold: exact, same values as the distributed prefix sum.

@@ -305,14 +305,11 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.collect_set("p_brand").alias("bs"))
     )
     # e feeds TWO legs (the 25-row brand-degree agg and the moment
-    # row): only the shuffle below the collect_set agg is deduplicated
-    # by exchange reuse — the agg + explode re-ran per leg. persist
-    # the edge frame once (r12, guide §5; computed fresh per
-    # invocation, two narrow bigint/string columns).
+    # row); exchange reuse shares the shuffle below the collect_set.
     e = sets.select(
         F.size("bs").cast("bigint").alias("dx"),
         F.explode("bs").alias("brand"),
-    ).persist()
+    )
     dt = e.groupBy("brand").agg(
         F.count(F.lit(1)).cast("bigint").alias("dy")
     )

@@ -69,16 +69,9 @@ def audit_fk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Join strategy (ADVICE r12, guide §3.1): the dims here are
     DATA-SIZED at the design point (orders.o_orderkey is one key per
-    order; customer grows with the data), so a forced broadcast of
-    their distinct key sets would exceed Spark's broadcast cap and
-    the driver's memory at 100 TB. The hint is therefore gated on a
-    static size probe of the pre-distinct key scan
-    (``broadcast_if_small``): it fires at test scale (keeping the
-    local plan's broadcast joins) and degrades to a planner-chosen
-    shuffle join exactly when the dim is too big to ship."""
-    from flirt_consume_spark.io import table_bytes
-    from flirt_consume_spark.operators.scale import broadcast_if_small
-
+    order; customer grows with the data), so their distinct key sets
+    carry no broadcast hint: the planner (and AQE, from runtime
+    stats) broadcasts them while they fit and shuffles otherwise."""
     by_fact: dict[str, list] = {}
     for fact, fk, dim, dk in _FK_RELS:
         by_fact.setdefault(fact, []).append((fk, dim, dk))
@@ -90,13 +83,7 @@ def audit_fk(spark: SparkSession, sf_dir: str) -> DataFrame:
             raw_keys = t(spark, sf_dir, dim).select(
                 F.col(dk).alias(f"_dk{i}")
             )
-            # probe_bytes = on-disk size of the dim (zero-cost; a
-            # plan-statistics probe here cost 4 extra optimizer
-            # passes per invocation, ~0.2 s of plan-build time)
-            keys = broadcast_if_small(
-                raw_keys.distinct(),
-                probe_bytes=table_bytes(sf_dir, dim),
-            )
+            keys = raw_keys.distinct()
             probe = probe.join(
                 keys, probe[fk] == keys[f"_dk{i}"], "left_outer"
             )
@@ -670,23 +657,13 @@ def time_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
     # full extra scan of the point stream plus a join-back.
     from flirt_consume_spark.operators.scale import grouped_rank
 
-    # Pin bk: it feeds TWO legs (bucket-mean anchors + the scored
-    # join). grouped_rank pins only its internal range-partitioned
-    # frame, so without this each leg re-ran the per-partition offset
-    # aggregation and the offsets broadcast join above the pinned
-    # blocks — the whole rank machinery twice (r12 session 5). The
-    # lazy local checkpoint materializes (point, rank, bucket) once.
-    bk = (
-        grouped_rank(
-            pts,
-            ["event_type"],
-            [F.col("xs"), F.col("event_id")],
-            rank_col="r",
-            count_col="cnt",
-        )
-        .withColumn("b", F.expr(f"((r - 1) * {_DS_BUCKETS}) div cnt"))
-        .localCheckpoint(eager=False)
-    )
+    bk = grouped_rank(
+        pts,
+        ["event_type"],
+        [F.col("xs"), F.col("event_id")],
+        rank_col="r",
+        count_col="cnt",
+    ).withColumn("b", F.expr(f"((r - 1) * {_DS_BUCKETS}) div cnt"))
     bm = bk.groupBy("event_type", "b").agg(
         (F.sum("xs").cast("double") / F.count(F.lit(1))).alias("mx"),
         (F.sum("yl").cast("double") / F.count(F.lit(1))).alias("my"),
@@ -1046,26 +1023,15 @@ def graph_ancestors(spark: SparkSession, sf_dir: str) -> DataFrame:
     frontier = pmap.select(
         "node", F.col("parent").alias("ancestor"), F.lit(1).alias("depth")
     )
-    # Each frontier feeds TWO consumers — the output union leg and
-    # the next hop's join. Unpersisted, the union leg for depth k
-    # re-executes a k-join chain from the scan (broadcast joins leave
-    # no exchange to reuse), Σk ≈ d²/2 joins for d hops. persist()
-    # makes each hop's result compute once (r12, guide §5: reused AND
-    # expensive to recompute; frontiers shrink as chains hit the
-    # root, so the cached footprint is bounded by the live-path
-    # count).
-    frontier = frontier.persist()
     out = frontier
     for d in range(2, _ANC_DEPTH + 1):
         nxt = pmap.select(
             F.col("node").alias("_pn"), F.col("parent").alias("_pp")
         )
-        frontier = (
-            frontier.join(nxt, frontier["ancestor"] == nxt["_pn"])
-            .select(
-                "node", F.col("_pp").alias("ancestor"), F.lit(d).alias("depth")
-            )
-            .persist()
+        frontier = frontier.join(
+            nxt, frontier["ancestor"] == nxt["_pn"]
+        ).select(
+            "node", F.col("_pp").alias("ancestor"), F.lit(d).alias("depth")
         )
         out = out.unionByName(frontier)
     return out

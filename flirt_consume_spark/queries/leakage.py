@@ -95,8 +95,8 @@ def llm_cross_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly (identical sha256) or nearly (share a MinHash-LSH band
     with one). Both layers are candidate-generation shapes that
     never go all-pairs: the exact layer is a hash semi-join, the
-    near layer re-uses the banded LSH equi-join pair set already
-    cached for the dedup ladder (computed once per session).
+    near layer re-uses the dedup ladder's banded LSH equi-join pair
+    build (rebuilt per invocation).
 
     Scale: split assignment is a narrow md5 projection; the exact
     layer shuffles one sha256 per doc; the near layer joins the
@@ -104,24 +104,12 @@ def llm_cross_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Nothing is quadratic; the held-out side needs no broadcast
     assumption."""
     docs = t(spark, sf_dir, "documents")
-    # Pin the split projection: FIVE plan legs consume it (exact-leak
-    # probe + build, the two pair-flag sides, the final train
-    # rollup), and unpinned each leg re-read the corpus text and
-    # re-hashed it — sha256 of every document three times, five
-    # document scans per run (r12 session 5, guide §5). The pinned
-    # frame is narrow (ids + split flag + 64-hex digest, no text);
-    # lazy and per-invocation, no cross-run reuse.
-    from flirt_consume_spark.operators.scale import fan_out
-
-    # fan_out below the pin (r13, guide §2.5): sha256 of every document
-    # otherwise runs as ONE task over the single-row-group fixture; the
-    # pin has one materialization, so no multi-leg re-shuffle hazard.
-    split = fan_out(docs.select("doc_id", "source", "text")).select(
+    split = docs.select(
         "doc_id",
         "source",
         (_BUCKET_SPARK(F.col("doc_id")) >= 90).alias("heldout"),
         F.sha2(F.col("text"), 256).alias("sha"),
-    ).localCheckpoint(eager=False)
+    )
     train = split.filter(~F.col("heldout"))
     held = split.filter(F.col("heldout"))
     exact_leak = (

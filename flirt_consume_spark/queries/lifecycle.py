@@ -292,12 +292,7 @@ def pareto_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("p_retailprice") * 100).cast("bigint").alias("price_cents"),
         F.col("p_size").cast("bigint").alias("size"),
     )
-    # Pin the narrow point frame: the windowed pass and the two
-    # bucket-maxima legs each re-scanned part (3 scans in the plan →
-    # 1; r12 session 5, guide §5). Lazy, per-invocation.
-    pts = pts.withColumn(
-        "_b", F.expr("price_cents DIV 10000")
-    ).localCheckpoint(eager=False)
+    pts = pts.withColumn("_b", F.expr("price_cents DIV 10000"))
     w_local = (
         Window.partitionBy("_b")
         .orderBy("price_cents")

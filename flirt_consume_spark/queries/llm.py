@@ -757,18 +757,17 @@ def _recall_legs(emb, buckets, queries: list, k: int = 3):
     """Shared exact/ANN ranked legs for the recall-eval keys (r12,
     guide §2.4 "remove shuffles outright" / §5): the ANN candidate
     set is exactly the bucket-equal SUBSET of the exact leg's pair
-    set, so both top-k rankings can read ONE scored frame — the
-    broadcast-query cosine pass runs once instead of twice, and the
-    checkpointed frame is narrow (ids + cos + bucket flag, no
-    vectors). Ranking semantics are knn_exact's / ann_lsh's
-    verbatim: round(cos, 6) DESC with neighbor-id tie-break,
-    row_number ≤ k; the ann leg filters BEFORE ranking, exactly like
-    the bucket equi-join it replaces (one bucket per vector, so the
-    join produced each candidate at most once).
+    set, so both top-k rankings read ONE scored frame, narrow (ids +
+    cos + bucket flag, no vectors). Ranking semantics are
+    knn_exact's / ann_lsh's verbatim: round(cos, 6) DESC with
+    neighbor-id tie-break, row_number ≤ k; the ann leg filters
+    BEFORE ranking, exactly like the bucket equi-join it replaces
+    (one bucket per vector, so the join produced each candidate at
+    most once).
 
     ``buckets=None`` means ``emb`` already carries its ``bucket``
-    column (the planted key fuses the in-row signature into its
-    checkpoint — r12 session 5), so no bucket join is needed."""
+    column (the planted key computes the signature in-row — r12
+    session 5), so no bucket join is needed."""
     from pyspark.sql.window import Window as W
 
     vecs = emb.select(
@@ -798,9 +797,6 @@ def _recall_legs(emb, buckets, queries: list, k: int = 3):
             F.round(S.cosine(F.col("qv"), F.col("cv")), 6).alias("cos_sim"),
             (F.col("_qb") == F.col("_cb")).alias("_same"),
         )
-        # Lazy, per-invocation: both ranked legs read one
-        # materialization; no cross-run reuse.
-        .localCheckpoint(eager=False)
     )
     w = W.partitionBy("query_id").orderBy(
         F.col("cos_sim").desc(), "neighbor_id"
@@ -951,22 +947,12 @@ def emb_recall_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
     together. sf_dir is unused by design: the table derives from md5
     arithmetic alone, identically in both engines, so the key is a
     pure index-quality gauge at any scale factor."""
-    # localCheckpoint: the 120-row planted frame is pure md5
-    # expression work (~15k md5+conv calls) consumed by FOUR legs
-    # (exact knn, hyperplane bucketing, ANN, and their self-join
-    # sides) — materialize it once and hand every consumer a
-    # lineage-free scan, which also collapses each leg's huge
-    # expression tree at planning/codegen time (r12, guide §5).
-    # The LSH bucket is FUSED into the same checkpoint as an in-row
-    # sign-bit expression (operators.similarity.bucket_expr — the
-    # identical md5-parity planes, bit-identical fold order), so the
-    # separate explode/aggregate bucket build and the vec ⋈ bucket
-    # join disappear (r12 session 5). Lazy, per-invocation: no
-    # cross-run reuse.
-    emb = (
-        _planted_table(spark)
-        .withColumn("bucket", S.bucket_expr("embedding"))
-        .localCheckpoint(eager=False)
+    # The LSH bucket is an in-row sign-bit expression
+    # (operators.similarity.bucket_expr — the identical md5-parity
+    # planes, bit-identical fold order), so no separate
+    # explode/aggregate bucket build or vec ⋈ bucket join exists.
+    emb = _planted_table(spark).withColumn(
+        "bucket", S.bucket_expr("embedding")
     )
     queries = list(range(_PLANTED_CLUSTERS))
     exact, ann = _recall_legs(emb, None, queries)

@@ -99,9 +99,9 @@ def pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.select(
         "source", "doc_id", F.size(X.tokens("text")).cast("bigint").alias("n_tok")
     )
-    # pin_sample: the child carries the regex tokenizer — at scale the
-    # range sampler would re-run it over the corpus (ADVICE r12 /
-    # _sample_safe; cheap scan-children leave the default False).
+    # pin_sample: the child carries the regex tokenizer, which the
+    # range sampler would otherwise re-run over the corpus (ADVICE
+    # r12; cheap scan-children leave the default False).
     packed = grouped_cumsum(
         toks,
         "n_tok",

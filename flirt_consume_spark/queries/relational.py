@@ -450,8 +450,8 @@ def agg_conditional(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (events.event_type, value): the range shuffle behind the rank is the
 # query's only data-sized stage, and the rank-bounds selection it
 # feeds is ≤2 rows per requested percentile per group. Built fresh
-# PER INVOCATION with a lazy pin on the tiny selection — no
-# cross-invocation memo (r13; every bench/oracle run recomputes).
+# PER INVOCATION — no cross-invocation memo (r13; every bench/oracle
+# run recomputes).
 _EVENTS_PCT_PS = [0.5, 0.25, 0.75, 0.0, 1.0]
 _EVENTS_PCT_OUT = ["_med", "_p25", "_p75", "_min", "_max"]
 
@@ -470,7 +470,7 @@ def _events_pct_selection(spark: SparkSession, sf_dir: str):
     )
     return percentile_selection(
         staged, ["event_type"], _EVENTS_PCT_PS, _EVENTS_PCT_OUT
-    ).localCheckpoint(eager=False)
+    )
 
 
 @query(

@@ -291,7 +291,6 @@ def llm_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.split_part(F.col("bg"), F.lit(" "), F.lit(1)).alias("w1"),
         F.split_part(F.col("bg"), F.lit(" "), F.lit(2)).alias("w2"),
     )
-    big = big.persist()  # three aggregation legs below
     bc = big.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c_ab"))
     uni = big.groupBy("w1").agg(F.count(F.lit(1)).alias("c")).select(
         F.col("w1").alias("w"), "c"
@@ -434,16 +433,12 @@ def emb_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     vectors stream through — exactly the shape that feeds a
     driver/BLAS eigensolve at any scale."""
     emb = t(spark, sf_dir, "embeddings")
-    # Pin the quantized vector frame: the moments leg (upper-triangle
-    # explode) and the per-column sums leg each re-scanned embeddings
-    # and re-ran the 64-element quantize transform (r12 session 5,
-    # guide §5). Lazy, per-invocation: no cross-run reuse.
     xs = emb.select(
         "vec_id",
         F.expr(
             "transform(embedding, x -> CAST(floor(x * 1e6) AS LONG))"
         ).alias("xl"),
-    ).localCheckpoint(eager=False)
+    )
     pairs = (
         xs.select(F.posexplode("xl").alias("_ia", "xi"), F.col("xl"))
         .select("_ia", "xi", F.posexplode("xl").alias("_ib", "xj"))
@@ -608,7 +603,6 @@ def _power_w_build(spark: SparkSession, sf_dir: str):
             )
         )
     mx = w.agg(F.max(F.abs(F.col("w"))).alias("_m"))
-    w = w.localCheckpoint(eager=False)
     return w, mx, cov
 
 

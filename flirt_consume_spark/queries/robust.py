@@ -65,24 +65,14 @@ def join_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     join+rank form would materialize probe×version pairs at scale.
     Gaps are exact integer µs."""
     ev = t(spark, sf_dir, "events")
-    # Pin both narrow projections: the backward AND forward as-of
-    # legs each re-scanned events for clicks and purchases (4 scans
-    # in the plan → 2 materializations; r12 session 5, guide §5).
-    # Lazy, per-invocation.
-    clicks = (
-        ev.filter(F.col("event_type") == "click")
-        .select(
-            "user_id",
-            "ts",
-            F.col("event_id").alias("click_id"),
-            F.unix_micros("ts").alias("c_us"),
-        )
-        .localCheckpoint(eager=False)
+    clicks = ev.filter(F.col("event_type") == "click").select(
+        "user_id",
+        "ts",
+        F.col("event_id").alias("click_id"),
+        F.unix_micros("ts").alias("c_us"),
     )
-    purchases = (
-        ev.filter(F.col("event_type") == "purchase")
-        .select("user_id", "ts", "event_id")
-        .localCheckpoint(eager=False)
+    purchases = ev.filter(F.col("event_type") == "purchase").select(
+        "user_id", "ts", "event_id"
     )
     common = dict(
         key="user_id",
@@ -161,19 +151,12 @@ def agg_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flirt_consume_spark.queries.base import finite_or_fail
 
     ev = t(spark, sf_dir, "events")
-    # Pin the quantized value frame: the three algorithmic passes
-    # (median, MAD, threshold count) are inherent, but unpinned each
-    # pass re-SCANNED events and re-ran the quantize/guard projection
-    # (3 scans in the plan; 5 counting the dev recompute legs). The
-    # pinned frame is narrow (type + 8-byte vq); the med/mad build
-    # sides keep their explicit broadcasts (r12 session 5, guide §5).
-    # Lazy, per-invocation: no cross-run reuse.
     v = ev.select(
         "event_type",
         F.floor(finite_or_fail(F.col("value"), "agg_mad_outliers") * 1e6)
         .cast("bigint")
         .alias("vq"),
-    ).localCheckpoint(eager=False)
+    )
     med = v.groupBy("event_type").agg(F.median("vq").alias("m"))
     dev = v.join(F.broadcast(med), "event_type").select(
         "event_type", "vq", F.abs(F.col("vq") - F.col("m")).alias("ad")

@@ -81,15 +81,11 @@ def shape_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     AQE already broadcasts the pruned side). It is therefore gated on
     the ``semi_prune_if_large`` static size probe: local plans are
     byte-identical to the ungated join, and at the design point the
-    data-sized sides are cut ~4/5 before their exchange. supplier's
-    broadcast hint is likewise size-gated (``broadcast_if_small``) —
-    supplier grows with the data, so an unconditional hint is the
-    audit_fk class of 100-TB abort."""
+    data-sized sides are cut ~4/5 before their exchange. supplier
+    grows with the data, so it carries no broadcast hint: AQE
+    broadcasts it from runtime stats while it fits."""
     from flirt_consume_spark.io import table_bytes
-    from flirt_consume_spark.operators.scale import (
-        broadcast_if_small,
-        semi_prune_if_large,
-    )
+    from flirt_consume_spark.operators.scale import semi_prune_if_large
 
     cust = t(spark, sf_dir, "customer")
     orders = t(spark, sf_dir, "orders").filter(
@@ -118,9 +114,6 @@ def shape_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         asia_keys,
         F.col("s_nationkey") == F.col("_ak"),
         probe_bytes=table_bytes(sf_dir, "supplier"),
-    )
-    supp = broadcast_if_small(
-        supp, probe_bytes=table_bytes(sf_dir, "supplier")
     )
     revenue = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
@@ -357,23 +350,17 @@ def shape_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     region/type filters prune before the aggregate, and the share is
     an exact integer-cent rational.
 
-    Scale gating (r13, guide §3.2): part grows with the data, so its
-    broadcast hint is size-gated (``broadcast_if_small`` — the
-    ECONOMY filter keeps it broadcastable far up the scale curve,
-    but an unconditional hint aborts at the point it stops fitting),
-    and the transitive ASIA restriction on customer (c_nationkey →
-    n1 → region) is applied as a ``semi_prune_if_large`` prefilter
-    that only engages when customer is estimated too big to
-    broadcast — local plans unchanged, data-sized exchange cut ~4/5
-    at the design point."""
+    Scale gating (r13, guide §3.2): part carries no broadcast hint
+    (AQE broadcasts the ECONOMY-filtered side from runtime stats
+    while it fits), and the transitive ASIA restriction on customer
+    (c_nationkey → n1 → region) is applied as a
+    ``semi_prune_if_large`` prefilter that only engages when customer
+    is estimated too big to broadcast — local plans unchanged,
+    data-sized exchange cut ~4/5 at the design point."""
     from flirt_consume_spark.io import table_bytes
-    from flirt_consume_spark.operators.scale import (
-        broadcast_if_small,
-        semi_prune_if_large,
-    )
+    from flirt_consume_spark.operators.scale import semi_prune_if_large
 
-    part_raw = t(spark, sf_dir, "part")
-    part = part_raw.filter(F.col("p_type") == "ECONOMY")
+    part = t(spark, sf_dir, "part").filter(F.col("p_type") == "ECONOMY")
     li = t(spark, sf_dir, "lineitem")
     sup = t(spark, sf_dir, "supplier")
     orders = t(spark, sf_dir, "orders")
@@ -402,8 +389,7 @@ def shape_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100
     ).cast("long")
     j = (
-        broadcast_if_small(part, probe_bytes=table_bytes(sf_dir, "part"))
-        .join(li, F.col("p_partkey") == F.col("l_partkey"))
+        part.join(li, F.col("p_partkey") == F.col("l_partkey"))
         .join(sup, F.col("s_suppkey") == F.col("l_suppkey"))
         .join(orders, F.col("o_orderkey") == F.col("l_orderkey"))
         .join(cust, F.col("c_custkey") == F.col("o_custkey"))

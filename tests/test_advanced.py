@@ -367,3 +367,29 @@ def test_semdedup_pairs_within_kmeans_cells_only(spark):
     for dup, links in expect.items():
         assert got[dup]["canonical_id"] == min(links)
         assert got[dup]["n_links"] == len(links)
+
+
+def test_badrecords_flags_line_corrupt_only_in_unread_column(spark):
+    """scan_badrecords' localCheckpoint is a correctness boundary: the
+    query reads only o_totalprice and _corrupt_record, and CSV column
+    pruning would then parse only those, counting a line whose sole
+    defect is a non-numeric o_orderkey as good. The pin makes the scan
+    parse every schema column, so such a line is quarantined."""
+    import os
+
+    from flirt_consume_spark.io import cache_path
+    from flirt_consume_spark.queries import REGISTRY
+
+    fn = REGISTRY["scan_badrecords"].fn
+    before = fn(spark, SF).collect()[0]  # also builds the CSV fixture
+    extra = os.path.join(
+        cache_path("badcsv", SF, "orders"), "zz_key_only_corrupt.csv"
+    )
+    try:
+        with open(extra, "w") as fh:
+            fh.write("not_a_key,12.5\n")
+        after = fn(spark, SF).collect()[0]
+    finally:
+        os.remove(extra)
+    assert after["n_bad"] == before["n_bad"] + 1
+    assert after["n_good"] == before["n_good"]

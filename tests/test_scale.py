@@ -427,25 +427,12 @@ def test_semi_prune_gate_static_probe(spark):
     # plan carries the semi join
     plan = pruned._jdf.queryExecution().executedPlan().toString()
     assert "LeftSemi" in plan
-
-
-def test_broadcast_if_small_gate(spark):
-    """r13 (ADVICE r12 audit_fk): broadcast hints on data-sized dims
-    must be size-gated — the hint fires under the threshold and is
-    ABSENT (planner's choice) above it."""
-    from flirt_consume_spark.operators.scale import broadcast_if_small
-
-    orders = load_table(spark, SF, "orders").select("o_orderkey")
-    keys = orders.distinct()
-    hinted = broadcast_if_small(keys, probe=orders)
-    # local probe is tiny: the hint must be present in the analyzed plan
-    assert "ResolvedHint" in hinted._jdf.queryExecution().analyzed().toString()
-    unhinted = broadcast_if_small(keys, probe=orders, threshold=1)
-    assert unhinted is keys
-    # a session with broadcast disabled never hints
+    # a session with broadcast disabled never force-broadcasts the keys
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        assert broadcast_if_small(keys, probe=orders) is keys
+        huge = 1 << 62  # an estimate far over any enabled threshold
+        assert semi_prune_if_large(cust, keys, cond, probe_bytes=huge) is cust
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+

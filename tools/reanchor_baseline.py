@@ -133,6 +133,14 @@ def main() -> int:
         for k in base["median"]
         if k in med and med[k] > 0 and k not in CACHE_ASSISTED_KEYS
     ]
+    if not crowd:
+        print(
+            "reanchor: the artifact shares no unaffected key with the "
+            "baseline, so the host factor cannot be normalized; "
+            "refusing (bench the full registry, not only the "
+            "cache-assisted keys)."
+        )
+        return 1
     host = statistics.median(crowd)
     denom = max(1.0, host)
     reanchored = dict(base.get("protocol", {}).get("reanchored", {}))
