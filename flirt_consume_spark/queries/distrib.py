@@ -7,7 +7,7 @@ Six families, one module:
 - `time_interpolate`: linear interpolation between sparse anchor
   observations (the resampling sibling of `win_locf`'s step fill);
 - `graph_bfs_dist`: multi-source BFS hop distances on an undirected
-  graph — level-synchronous frontier expansion, the visited-set
+  graph — depth-capped min-plus relaxation, the shortest-path
   pattern the ancestor-closure keys don't need;
 - `sample_reservoir`: per-group fixed-k deterministic reservoir
   sample via hierarchical (bucketed) top-k;
@@ -306,6 +306,47 @@ def _bfs_parent_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def bfs_dist(parents: DataFrame) -> DataFrame:
+    """Hop distances from the seeds (vertices ≡ 0 mod `_BFS_SEED_MOD`)
+    over the undirected graph of a ``(node, parent)`` frame plus the
+    root 0; vertices past `_BFS_MAX_DEPTH` hops are absent.
+
+    Min-plus relaxation in one lazy plan: ``adj`` holds both edge
+    directions at ``w = 1`` and a ``w = 0`` self loop at each seed, and
+    each round keeps ``min(dist + w)`` per far end. After round r the
+    state holds the vertices with an r-step walk from a seed, at the
+    fewest edges of any such walk; a path of d <= r hops waits r - d
+    steps at its seed, so distances are exact.
+    """
+    root = parents.sparkSession.range(1).select(
+        F.lit(0).cast("long").alias("node")
+    )
+    seeds = (
+        parents.select("node")
+        .unionByName(root)
+        .filter(F.col("node") % _BFS_SEED_MOD == 0)
+    )
+
+    def arcs(frame: DataFrame, src: str, dst: str, w: int) -> DataFrame:
+        return frame.select(
+            F.col(src).alias("src"), F.col(dst).alias("dst"), F.lit(w).alias("w")
+        )
+
+    adj = (
+        arcs(parents, "node", "parent", 1)
+        .unionByName(arcs(parents, "parent", "node", 1))
+        .unionByName(arcs(seeds, "node", "node", 0))
+    )
+    state = seeds.select("node", F.lit(0).cast("bigint").alias("dist"))
+    for _ in range(_BFS_MAX_DEPTH):
+        state = (
+            state.join(adj, F.col("node") == F.col("src"))
+            .groupBy(F.col("dst").alias("node"))
+            .agg(F.min(F.col("dist") + F.col("w")).alias("dist"))
+        )
+    return state
+
+
 @query(
     "graph_bfs_dist",
     oracle=f"""
@@ -333,68 +374,20 @@ def _bfs_parent_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def graph_bfs_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """G4: multi-source BFS hop distance on an undirected graph —
-    level-synchronous frontier expansion with a visited set, the
-    traversal pattern the (directed, acyclic) ancestor-closure keys
-    never need. Seeds are every node ≡ 0 mod 97; distances are
+    """G4: multi-source BFS hop distance on an undirected graph — the
+    shortest-path traversal the (directed, acyclic) ancestor-closure
+    keys never need. Seeds are every node ≡ 0 mod 97; distances are
     capped at {depth} hops (unreached nodes are absent — mirrored in
     the oracle's recursion guard).
 
-    Scale: per round the frontier joins the edge table on src (edges
-    hash-partitioned by the join key), new nodes are
-    discovered via LEFT ANTI against the visited set, and the
-    convergence probe is an O(1) count — no collect of data. Rounds
-    are bounded by the depth cap, not the data; frontier rows are
-    (node, dist) pairs only. Exact integer output — BFS min-dist is
-    partitioning-independent because expansion is level-synchronous
-    (a node discovered at level d can never later get a smaller d).
+    Scale: past the table open, the body launches no job. `bfs_dist`
+    builds {depth} rounds of min-plus relaxation as one lazy plan, so
+    the whole traversal runs in the caller's single action. The plan
+    grows by one join and one aggregate per round, bounded by the
+    depth cap, not the data. State rows are (node, dist) pairs only,
+    and the integer output is exact under any partitioning.
     """
-    parents = _bfs_parent_map(spark, sf_dir)
-    edges = (
-        parents.select(F.col("node").alias("src"), F.col("parent").alias("dst"))
-        .unionByName(
-            parents.select(
-                F.col("parent").alias("src"), F.col("node").alias("dst")
-            )
-        )
-        .repartition("src")
-    )
-    nodes = parents.select("node").unionByName(
-        spark.range(1).select(F.lit(0).cast("long").alias("node"))
-    )
-    seeds = nodes.filter(F.col("node") % _BFS_SEED_MOD == 0).select(
-        "node", F.lit(0).cast("bigint").alias("dist")
-    )
-    # visited = lazy UNION of the seeds and the per-level checkpointed
-    # frontiers: each level is materialized exactly once (its own
-    # checkpoint); re-checkpointing the whole union every round
-    # re-wrote ALL visited rows per level — O(V · depth) total
-    # materialization for state that never changes after discovery
-    # (r12, guide §5 localCheckpoint: cut lineage, don't re-copy
-    # data).
-    frontier = visited = seeds
-    for depth in range(1, _BFS_MAX_DEPTH + 1):
-        candidates = (
-            frontier.join(edges, frontier["node"] == edges["src"])
-            .select(F.col("dst").alias("node"))
-            .distinct()
-        )
-        new = candidates.join(visited, "node", "left_anti").select(
-            "node", F.lit(depth).cast("bigint").alias("dist")
-        )
-        # O(1) convergence probe riding the checkpoint's own action
-        # via observe() (r12) — one job per level instead of two.
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        new = new.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(
-            eager=True
-        )
-        if obs.get["n"] == 0:
-            break
-        visited = visited.unionByName(new)
-        frontier = new
-    return visited
+    return bfs_dist(_bfs_parent_map(spark, sf_dir))
 
 
 graph_bfs_dist.__doc__ = graph_bfs_dist.__doc__.format(depth=_BFS_MAX_DEPTH)

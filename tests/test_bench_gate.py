@@ -202,10 +202,11 @@ def test_driver_r11_loaded_host_artifact_passes_with_min_fallback():
 
 
 def test_cli_refuses_cross_sf_comparison(tmp_path):
-    """An artifact benched at a different sf than the frozen baseline
-    must get an explicit NOT APPLICABLE verdict from the CLI, not a
-    garbage ratio comparison (the driver overwrites
-    BENCH_FULL_latest.json with whichever leg it ran last)."""
+    """An artifact benched at a different sf or on a different master
+    than the frozen baseline must get an explicit NOT APPLICABLE
+    verdict from the CLI, not a garbage ratio comparison (the driver
+    overwrites BENCH_FULL_latest.json with whichever leg it ran
+    last)."""
     import subprocess
 
     art = tmp_path / "art.json"
@@ -237,7 +238,43 @@ def test_cli_refuses_cross_sf_comparison(tmp_path):
     )
     assert proc.returncode == 0
     assert "NOT APPLICABLE" in proc.stdout
-    # Same-sf artifact with the same numbers takes the normal path.
+    # Same sf but benched on another master: refused the same way.
+    base.write_text(
+        json.dumps(
+            {
+                "median": {"a": 1.0},
+                "protocol": {
+                    "sf_dir": "/root/testdata/sf0.1",
+                    "master": "local[32]",
+                },
+            }
+        )
+    )
+    art.write_text(
+        json.dumps(
+            {
+                "sf": "/root/testdata/sf0.1",
+                "master": "local[8]",
+                "queries": {"a": 900.0},
+            }
+        )
+    )
+    proc = subprocess.run(
+        [
+            sys.executable,
+            os.path.join(REPO, "tools", "bench_gate.py"),
+            "--artifact",
+            str(art),
+            "--baseline",
+            str(base),
+        ],
+        capture_output=True,
+        text=True,
+    )
+    assert proc.returncode == 0
+    assert "NOT APPLICABLE" in proc.stdout
+    # Same-sf artifact with the same numbers and no master field takes
+    # the normal path.
     art.write_text(
         json.dumps(
             {"sf": "/root/testdata/sf0.1", "queries": {"a": 900.0}}

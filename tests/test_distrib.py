@@ -18,6 +18,7 @@ from flirt_consume_spark.queries.distrib import (
     _BFS_SEED_MOD,
     _RSV_K,
     _RSV_SALT,
+    bfs_dist,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -102,18 +103,16 @@ def test_interpolate_matches_pandas(spark):
     assert n_interpolated > 100  # the interesting branch actually ran
 
 
-def test_bfs_matches_python_bfs(spark):
+def _python_bfs(pairs: list[tuple[int, int]]) -> dict[int, int]:
+    """Capped multi-source BFS over (node, parent) pairs plus root 0."""
     from collections import deque
 
-    cust = load_table(spark, SF, "customer").select("c_custkey").toPandas()
     adj: dict[int, list[int]] = {0: []}
-    for k in cust.c_custkey:
-        n = int(k) + 1
-        h = int(hashlib.md5(str(n).encode()).hexdigest()[:8], 16)
-        p = h % (1 + n // 8)
+    for n, p in pairs:
         adj.setdefault(n, []).append(p)
         adj.setdefault(p, []).append(n)
-    dist = {n: 0 for n in adj if n % _BFS_SEED_MOD == 0}
+    nodes = {0} | {n for n, _ in pairs}
+    dist = {n: 0 for n in nodes if n % _BFS_SEED_MOD == 0}
     q = deque(dist)
     while q:
         u = q.popleft()
@@ -123,11 +122,51 @@ def test_bfs_matches_python_bfs(spark):
             if v not in dist:
                 dist[v] = dist[u] + 1
                 q.append(v)
+    return dist
+
+
+def test_bfs_matches_python_bfs(spark):
+    cust = load_table(spark, SF, "customer").select("c_custkey").toPandas()
+    pairs = []
+    for k in cust.c_custkey:
+        n = int(k) + 1
+        h = int(hashlib.md5(str(n).encode()).hexdigest()[:8], 16)
+        pairs.append((n, h % (1 + n // 8)))
     got = {
         r["node"]: r["dist"]
         for r in REGISTRY["graph_bfs_dist"].fn(spark, SF).collect()
     }
-    assert got == dist
+    assert got == _python_bfs(pairs)
+    # The fixtures' farthest node is 3-5 hops from a seed, so the cap
+    # only binds on a long path: 0 <- 1 <- ... <- 24, seeded at 0 alone.
+    path = [(n, n - 1) for n in range(1, 25)]
+    got = {
+        r["node"]: r["dist"]
+        for r in bfs_dist(spark.createDataFrame(path, "node long, parent long"))
+        .collect()
+    }
+    want = _python_bfs(path)
+    assert got == want == {n: n for n in range(_BFS_MAX_DEPTH + 1)}
+
+
+def test_bfs_body_runs_no_job_beyond_the_table_open(spark):
+    """The traversal is one lazy plan: building it launches only the
+    jobs of opening its one table, never a per-level action."""
+    sc = spark.sparkContext
+
+    def jobs(group, build):
+        sc.setJobGroup(group, group)
+        try:
+            build()
+        finally:
+            sc.setJobGroup(None, None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    n_open = jobs("bfs-open", lambda: load_table(spark, SF, "customer"))
+    n_body = jobs(
+        "bfs-body", lambda: REGISTRY["graph_bfs_dist"].fn(spark, SF)
+    )
+    assert n_body == n_open
 
 
 def test_reservoir_is_exact_topk_per_source(spark):

@@ -182,6 +182,18 @@ def main() -> int:
             "same-scale-factor only. No verdict."
         )
         return 0
+    # The same holds across masters: the driver benches local[32] and
+    # local[8] legs into the same file, and per-key medians of one
+    # core count are no reference for the other.
+    art_master = art.get("master")
+    base_master = base.get("protocol", {}).get("master")
+    if art_master and base_master and art_master != base_master:
+        print(
+            f"bench_gate: NOT APPLICABLE — artifact benched on {art_master} "
+            f"but baseline frozen on {base_master}; the 2x contract is "
+            "same-protocol only. No verdict."
+        )
+        return 0
 
     res = evaluate(
         art["queries"],

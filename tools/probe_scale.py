@@ -69,8 +69,8 @@ def timed(name: str, df: DataFrame) -> dict | None:
 
 def timed_call(name: str, thunk) -> dict | None:
     """Like ``timed`` but the pipeline is built INSIDE the clock — for
-    operators whose construction already executes work (the iterative
-    BFS eagerly checkpoints each frontier round)."""
+    operators whose construction already executes work (the BPE
+    trainer collects its merge each round)."""
     if ONLY and name.rsplit("_x", 1)[0] not in ONLY:
         return None
     t0 = time.time()
@@ -259,9 +259,9 @@ def main() -> None:
         timed(f"interp_x{n}", _interp(multiply(
             load_table(spark, args.sf, "events"), ["event_id", "user_id"],
             n, 10_000_000))),
-        # Level-synchronous BFS: rounds bounded by depth cap, frontier
-        # joins ride the cached edge partitioning.
-        timed_call(f"bfs_x{n}", lambda: _bfs(spark, cu_cnt * n)),
+        # Depth-capped min-plus BFS: one lazy plan of a join and an
+        # aggregate per round; rows per round track the node count.
+        timed(f"bfs_x{n}", _bfs(spark, cu_cnt * n)),
         # Hierarchical reservoir top-k: no whole-group window.
         timed(f"reservoir_x{n}", _rsv(docs_n)),
         # Gram-novelty: narrow per-doc distinct shingles -> first-seen
@@ -365,7 +365,7 @@ def main() -> None:
         timed("recursive_x1", _recursive(spark, cu_cnt)),
         timed("ks_x1", _ks(od)),
         timed("interp_x1", _interp(load_table(spark, args.sf, "events"))),
-        timed_call("bfs_x1", lambda: _bfs(spark, cu_cnt)),
+        timed("bfs_x1", _bfs(spark, cu_cnt)),
         timed("reservoir_x1", _rsv(docs)),
         timed("novelty_x1", _novelty(docs)),
         timed("mwu_x1", _mwu(od)),
@@ -1065,45 +1065,19 @@ def _interp(ev: DataFrame) -> DataFrame:
 
 
 def _bfs(spark, n_nodes: int) -> DataFrame:
-    parents = spark.range(0, n_nodes).select(
-        (F.col("id") + 1).alias("node"),
+    # graph_bfs_dist's own relaxation over the same md5 parent map on
+    # a contiguous node range (see the recursive_x probe note).
+    from flirt_consume_spark.queries.distrib import bfs_dist
+
+    node = F.col("id") + 1
+    return bfs_dist(spark.range(0, n_nodes).select(
+        node.alias("node"),
         (
-            F.conv(F.substring(F.md5((F.col("id") + 1).cast("string")), 1, 8), 16, 10)
+            F.conv(F.substring(F.md5(node.cast("string")), 1, 8), 16, 10)
             .cast("long")
-            % (1 + ((F.col("id") + 1) / 8).cast("long"))
+            % (1 + (node / 8).cast("long"))
         ).alias("parent"),
-    )
-    edges = (
-        parents.select(F.col("node").alias("src"), F.col("parent").alias("dst"))
-        .unionByName(
-            parents.select(F.col("parent").alias("src"), F.col("node").alias("dst"))
-        )
-        .repartition("src")
-        .cache()
-    )
-    seeds = (
-        parents.select("node")
-        .unionByName(spark.range(1).select(F.lit(0).cast("long").alias("node")))
-        .filter(F.col("node") % 97 == 0)
-        .select("node", F.lit(0).cast("bigint").alias("dist"))
-    )
-    visited = seeds.localCheckpoint(eager=True)
-    frontier = visited
-    for depth in range(1, 9):
-        cand = (
-            frontier.join(edges, frontier["node"] == edges["src"])
-            .select(F.col("dst").alias("node"))
-            .distinct()
-        )
-        new = cand.join(visited, "node", "left_anti").select(
-            "node", F.lit(depth).cast("bigint").alias("dist")
-        ).localCheckpoint(eager=True)
-        if new.count() == 0:
-            break
-        visited = visited.unionByName(new).localCheckpoint(eager=True)
-        frontier = new
-    edges.unpersist()
-    return visited
+    ))
 
 
 def _rsv(docs: DataFrame) -> DataFrame:
