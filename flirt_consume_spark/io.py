@@ -25,36 +25,17 @@ from pyspark.sql import functions as F
 from flirt_consume_spark import schemas
 from flirt_consume_spark.session import apply_runtime_confs
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """S1: parquet scan of one driver table (TESTDATA.md).
-
-    ``events.ts`` is TIMESTAMP(NANOS) in the file; with the
-    nanosAsLong legacy conf it scans as int64 nanos and is converted
-    here to µs TimestampType with integer division (``DIV`` stays in
-    long arithmetic — ``/1000`` would round-trip through double and
-    corrupt the low bits at 1.7e18 ns magnitudes).
-
-    Depending on the reader configuration the same column can instead
-    arrive as TIMESTAMP_NTZ (the driver environment scans it that way).
-    Every timestamp-typed column is therefore normalized to plain
-    TimestampType here — the session zone is pinned to UTC, so the
-    NTZ→TZ cast is the identity on the stored micros — and downstream
-    consumers (``unix_micros``, window gaps, watermarks) see exactly
-    one type regardless of reader path.
+    """S1: parquet scan of one driver table (TESTDATA.md) through its
+    declared ``schemas.TABLES`` schema. No footer inference, so the
+    open launches no Spark job, and a file whose column types drift
+    from the declaration fails on the first action (SURVEY.md §1.3).
     """
     apply_runtime_confs(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
-        df = df.withColumn("ts", F.expr("timestamp_micros(ts DIV 1000)"))
-    ntz_cols = [c for c, dt in df.dtypes if dt == "timestamp_ntz"]
-    if ntz_cols:
-        df = df.withColumns(
-            {c: F.col(c).cast("timestamp") for c in ntz_cols}
-        )
-    return df
+    return spark.read.schema(schemas.TABLES[name]).parquet(
+        os.path.join(sf_dir, f"{name}.parquet")
+    )
 
 
 def load_tables(

@@ -12,9 +12,9 @@ discipline that makes that possible (SURVEY.md §4 hazards):
   way), sum in exact decimal arithmetic, and cast the final result
   back to double. Bit-exact at any parallelism — no tolerance games.
 - timestamps are stringified at second/µs precision on both sides
-  (events.ts is ns in the file; both Spark and DuckDB 1.0 truncate to
-  µs, but tz-awareness differs between their client bindings, so raw
-  timestamp outputs are avoided);
+  (the files store µs TIMESTAMP_NTZ, but tz-awareness differs between
+  the two engines' client bindings, so raw timestamp outputs are
+  avoided);
 - derived integers are cast to BIGINT on both sides (DuckDB's year()
   yields BIGINT, Spark's year() yields INT; DuckDB SUM(int) yields
   HUGEINT — every oracle casts back to BIGINT);

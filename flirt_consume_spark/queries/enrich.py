@@ -841,7 +841,7 @@ def sql_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
     # session, just sized for real data volumes; termination here is
     # additionally guaranteed by the level limit (100) and the strictly
     # decreasing parent map. Session-scoped by design — documented
-    # engine tuning, same class as load_table's nanosAsLong.
+    # engine tuning.
     spark.conf.set("spark.sql.cteRecursionRowLimit", str(100_000_000))
     return spark.sql(
         """

@@ -590,6 +590,7 @@ def sink_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     matching proves compaction is content-lossless. File-count
     assertions live in tests/test_sources.py."""
     from flirt_consume_spark.io import compact_parquet
+    from flirt_consume_spark.schemas import DOCUMENTS
 
     docs = t(spark, sf_dir, "documents")
     small = cache_path("smallfiles", sf_dir, "documents")
@@ -598,7 +599,7 @@ def sink_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.repartition(64).write.mode("overwrite").parquet(small)
     if not os.path.exists(os.path.join(compacted, "_SUCCESS")):
         compact_parquet(spark, small, compacted, target_bytes=4 * 1024 * 1024)
-    back = spark.read.parquet(compacted)
+    back = spark.read.schema(DOCUMENTS).parquet(compacted)
     return back.agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.sum(F.length("text")).cast("bigint").alias("sum_chars"),

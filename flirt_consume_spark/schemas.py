@@ -6,6 +6,13 @@ StructType, fail loudly on drift. Schemas below are verified against
 the driver's parquet footers (FIXTURES.md §A) plus the flirt-domain
 fixture schemas (FIXTURES.md §B) used by the ETL-signature operators
 (schedule expansion, time normalization, airport enrichment).
+
+``TABLES`` is the only description of the driver tables' layout:
+``io.load_table`` and ``streaming.jobs.read_events_stream`` read
+through it and infer nothing. The files store ``o_orderdate``,
+``l_shipdate`` and ``events.ts`` as µs TIMESTAMP_NTZ; Spark reads
+those as the declared TimestampType with the stored micros unchanged,
+whatever the session zone.
 """
 
 from __future__ import annotations
@@ -88,7 +95,7 @@ LINEITEM = _st(
 
 EVENTS = _st(
     ("event_id", LongType()),
-    ("ts", TimestampType()),  # ns in the file; Spark & DuckDB both read µs
+    ("ts", TimestampType()),
     ("user_id", LongType()),
     ("event_type", StringType()),
     ("value", DoubleType()),

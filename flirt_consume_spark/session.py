@@ -3,8 +3,10 @@
 Settings chosen for the 100-TB design point (SURVEY.md §4):
 - AQE on (runtime shuffle-partition coalescing, skew-join splitting,
   broadcast demotion/promotion from runtime stats);
-- session timezone pinned to UTC so timestamp semantics are
-  deterministic and match the DuckDB oracle;
+- session timezone pinned to UTC so rendered timestamps (date_format,
+  window bounds) are deterministic and match the DuckDB oracle; the
+  stored micros themselves are read unchanged in any zone, because
+  every table is read through its declared schema (schemas.py);
 - Arrow enabled for any Pandas-UDF path (the only sanctioned Python
   execution path — row-at-a-time Python UDFs are banned in this repo);
 - shuffle partitions sized for the local[32] test harness; on a real
@@ -26,12 +28,6 @@ RUNTIME_CONFS: dict[str, str] = {
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
-    # The driver's events table stores ns-precision timestamps, which
-    # Spark 4 rejects outright (PARQUET_TYPE_ILLEGAL). Read them as
-    # raw int64 nanos; io.load_table converts to µs TimestampType via
-    # integer DIV (bit-exact, and identical to DuckDB's ns->µs
-    # truncation of the same file).
-    "spark.sql.legacy.parquet.nanosAsLong": "true",
 }
 
 

@@ -19,43 +19,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
-    DoubleType,
     LongType,
     StringType,
     StructField,
     StructType,
-    TimestampNTZType,
     TimestampType,
 )
 
+from flirt_consume_spark import schemas
 from flirt_consume_spark.session import apply_runtime_confs
-
-# Events as they sit in a stream-source directory. Two layouts exist:
-# legacy int64 nanos (EVENTS_RAW, same legacy-conf handling as the
-# batch loader) and µs TIMESTAMP without timezone (EVENTS_RAW_US, the
-# current testdata layout — scans as TIMESTAMP_NTZ). read_events_stream
-# probes the directory once and normalizes both to TimestampType.
-EVENTS_RAW = StructType(
-    [
-        StructField("event_id", LongType()),
-        StructField("ts", LongType()),  # ns since epoch
-        StructField("user_id", LongType()),
-        StructField("event_type", StringType()),
-        StructField("value", DoubleType()),
-        StructField("props", StringType()),
-    ]
-)
-
-EVENTS_RAW_US = StructType(
-    [
-        StructField("event_id", LongType()),
-        StructField("ts", TimestampNTZType()),
-        StructField("user_id", LongType()),
-        StructField("event_type", StringType()),
-        StructField("value", DoubleType()),
-        StructField("props", StringType()),
-    ]
-)
 
 
 def read_events_stream(spark: SparkSession, source_dir: str) -> DataFrame:
@@ -64,49 +36,16 @@ def read_events_stream(spark: SparkSession, source_dir: str) -> DataFrame:
     dropped into source_dir is discovered and processed exactly once
     (tracked in the checkpoint's file log).
 
-    A streaming source needs its schema declared up front, so the ts
-    layout (int64 nanos vs µs NTZ) is probed with one batch footer
-    read of the files already present; either way the stream exposes
-    plain TimestampType (UTC session zone ⇒ the NTZ cast is identity),
-    matching io.load_table's batch normalization.
+    The stream reads through the same declared ``schemas.EVENTS`` as
+    the batch loader, so starting it runs no job, an empty directory
+    needs no special case, and a file whose layout drifts from the
+    declaration fails the batch that reads it.
     """
     apply_runtime_confs(spark)
-    try:
-        ts_dtype = dict(spark.read.parquet(source_dir).dtypes).get("ts")
-    except Exception:
-        # Empty dir at startup: the probe can't see any file, so we
-        # assume the CURRENT (µs TIMESTAMP_NTZ) layout. Say so loudly —
-        # if legacy int64-nano files arrive later, the declared NTZ
-        # schema would mis-read their bigint ts column rather than
-        # failing over, and this warning is the breadcrumb.
-        import warnings
-
-        warnings.warn(
-            f"read_events_stream: no readable parquet in {source_dir!r} "
-            "at startup; assuming µs TIMESTAMP_NTZ ts layout. If legacy "
-            "int64-nanos files land in this directory the ts column "
-            "will be misread — re-create the stream once files exist.",
-            stacklevel=2,
-        )
-        ts_dtype = "timestamp_ntz"
-    if ts_dtype == "bigint":
-        schema = EVENTS_RAW
-        ts_expr = F.expr("timestamp_micros(ts DIV 1000)")
-    else:
-        schema = EVENTS_RAW_US
-        ts_expr = F.col("ts").cast("timestamp")
-    raw = (
-        spark.readStream.schema(schema)
+    return (
+        spark.readStream.schema(schemas.EVENTS)
         .option("maxFilesPerTrigger", 8)
         .parquet(source_dir)
-    )
-    return raw.select(
-        "event_id",
-        ts_expr.alias("ts"),
-        "user_id",
-        "event_type",
-        "value",
-        "props",
     )
 
 

@@ -41,3 +41,23 @@ def duck():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_SMALL
+
+
+@pytest.fixture
+def jobs_started(spark):
+    """Count the Spark jobs a zero-argument callable starts, under a
+    fresh job group per call."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def count(build) -> int:
+        group = f"jobs-started-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            build()
+        finally:
+            sc.setJobGroup(None, None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count

@@ -149,23 +149,11 @@ def test_bfs_matches_python_bfs(spark):
     assert got == want == {n: n for n in range(_BFS_MAX_DEPTH + 1)}
 
 
-def test_bfs_body_runs_no_job_beyond_the_table_open(spark):
+def test_bfs_body_runs_no_job_beyond_the_table_open(spark, jobs_started):
     """The traversal is one lazy plan: building it launches only the
     jobs of opening its one table, never a per-level action."""
-    sc = spark.sparkContext
-
-    def jobs(group, build):
-        sc.setJobGroup(group, group)
-        try:
-            build()
-        finally:
-            sc.setJobGroup(None, None)
-        return len(sc.statusTracker().getJobIdsForGroup(group))
-
-    n_open = jobs("bfs-open", lambda: load_table(spark, SF, "customer"))
-    n_body = jobs(
-        "bfs-body", lambda: REGISTRY["graph_bfs_dist"].fn(spark, SF)
-    )
+    n_open = jobs_started(lambda: load_table(spark, SF, "customer"))
+    n_body = jobs_started(lambda: REGISTRY["graph_bfs_dist"].fn(spark, SF))
     assert n_body == n_open
 
 

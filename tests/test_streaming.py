@@ -114,13 +114,15 @@ def test_watermark_drops_late_events(spark, tmp_path):
     previous run (checkpoint carries the watermark across runs)."""
     import pandas as pd
 
-    ns = lambda s: int(pd.Timestamp(f"2024-03-01 {s}", tz="UTC").value)  # noqa: E731
+    from flirt_consume_spark.schemas import EVENTS
+
+    at = lambda s: pd.Timestamp(f"2024-03-01 {s}", tz="UTC")  # noqa: E731
 
     def write_file(rows, name, d):
         pdf = pd.DataFrame(
             rows, columns=["event_id", "ts", "user_id", "event_type", "value", "props"]
         )
-        spark.createDataFrame(pdf, schema=jobs.EVENTS_RAW).coalesce(1).write.mode(
+        spark.createDataFrame(pdf, schema=EVENTS).coalesce(1).write.mode(
             "append"
         ).parquet(d)
 
@@ -130,9 +132,9 @@ def test_watermark_drops_late_events(spark, tmp_path):
     # watermark to 11:50) → window [11:00, 11:05) closes and emits.
     write_file(
         [
-            (1, ns("11:00:00"), 1, "click", 1.0, "{}"),
-            (2, ns("11:01:00"), 1, "click", 1.0, "{}"),
-            (3, ns("12:00:00"), 1, "click", 1.0, "{}"),
+            (1, at("11:00:00"), 1, "click", 1.0, "{}"),
+            (2, at("11:01:00"), 1, "click", 1.0, "{}"),
+            (3, at("12:00:00"), 1, "click", 1.0, "{}"),
         ],
         "a",
         src,
@@ -163,8 +165,8 @@ def test_watermark_drops_late_events(spark, tmp_path):
     # and one fresh event at 12:30 that closes window [12:00, 12:05).
     write_file(
         [
-            (4, ns("11:02:00"), 1, "click", 1.0, "{}"),
-            (5, ns("12:30:00"), 1, "click", 1.0, "{}"),
+            (4, at("11:02:00"), 1, "click", 1.0, "{}"),
+            (5, at("12:30:00"), 1, "click", 1.0, "{}"),
         ],
         "b",
         src,
