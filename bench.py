@@ -54,6 +54,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 import time
 
@@ -61,6 +62,12 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from flirt_consume_spark.queries import REGISTRY
 from flirt_consume_spark.session import get_spark
+
+
+def protocol_artifact_name(master: str) -> str:
+    """File name of the full artifact for one Spark master:
+    ``local[32]`` -> ``BENCH_FULL_local32.json``."""
+    return f"BENCH_FULL_{re.sub(r'[^0-9A-Za-z]+', '', master)}.json"
 
 
 def materialize(df) -> None:
@@ -209,16 +216,18 @@ def main() -> None:
     # 2000-char stdout tail, which truncates a 105-key JSON line and
     # loses per-key numbers.  Persist the complete payload to a file in
     # the repo (committed each round) so round-over-round comparison
-    # never depends on the truncated tail.
-    full_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_FULL_latest.json"
-    )
-    try:
-        with open(full_path, "w") as fh:
-            json.dump(full, fh, indent=1, sort_keys=True)
-            fh.write("\n")
-    except OSError as e:
-        print(f"# bench: could not write {full_path}: {e}", file=sys.stderr)
+    # never depends on the truncated tail. The protocol-named copy keeps
+    # each master's numbers apart: a local[8] leg cannot overwrite the
+    # local[32] artifact.
+    here = os.path.dirname(os.path.abspath(__file__))
+    for name in ("BENCH_FULL_latest.json", protocol_artifact_name(contract["master"])):
+        full_path = os.path.join(here, name)
+        try:
+            with open(full_path, "w") as fh:
+                json.dump(full, fh, indent=1, sort_keys=True)
+                fh.write("\n")
+        except OSError as e:
+            print(f"# bench: could not write {full_path}: {e}", file=sys.stderr)
     print(json.dumps(full))
     # Compact summary LAST so it always fits inside the driver's stdout
     # tail and parses: total, key count, worst-5 keys, pointer to the

@@ -148,14 +148,11 @@ def consume_schedules(
         F.col("code").alias("_dc"),
         F.col("lat").alias("d_lat"),
         F.col("lon").alias("d_lon"),
-    )
-    d_off = ap.select(
-        F.col("code").alias("_dc2"), F.col("utc_offset_min").alias("d_offset")
+        F.col("utc_offset_min").alias("d_offset"),
     )
     enriched = (
         legs.join(F.broadcast(o), legs.orig == F.col("_oc"), "inner")
         .join(F.broadcast(d), legs.dest == F.col("_dc"), "inner")
-        .join(F.broadcast(d_off), legs.dest == F.col("_dc2"), "inner")
         .withColumn(
             "dep_ts_utc",
             F.to_timestamp(
@@ -189,7 +186,7 @@ def consume_schedules(
         )
         .withColumn("duration_min", (F.col("_dur_sec") / 60).cast("int"))
         .withColumn("month_key", F.date_format("dep_ts_utc", "yyyy-MM"))
-        .drop("_oc", "_dc", "_dc2", "_arr_naive", "_dur_sec")
+        .drop("_oc", "_dc", "_arr_naive", "_dur_sec")
     )
     return enriched, unknown
 

@@ -59,6 +59,24 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
 
 
+def md5_parent_map(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``(node, parent)`` over the customers: node = c_custkey + 1 and
+    parent(n) = md5(n)[:8] as hex % (1 + n div 8). The parent is
+    strictly smaller than the node, so the DAG ends at the virtual
+    root 0 and its depth is at most 1 + log₈ n. `graph_bfs_dist` and
+    `sql_recursive` walk it, and their oracles replay the same md5
+    arithmetic in DuckDB."""
+    node = F.col("c_custkey") + 1
+    return t(spark, sf_dir, "customer").select(
+        node.cast("long").alias("node"),
+        (
+            F.conv(F.substring(F.md5(node.cast("string")), 1, 8), 16, 10)
+            .cast("long")
+            % (1 + (node.cast("long") / 8).cast("long"))
+        ).alias("parent"),
+    )
+
+
 # --- exact-aggregation helpers (Spark side) ------------------------------
 
 

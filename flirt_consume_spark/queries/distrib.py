@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from flirt_consume_spark.operators.scale import global_cumsum
-from flirt_consume_spark.queries.base import query, t
+from flirt_consume_spark.queries.base import md5_parent_map, query, t
 
 # --- two-sample Kolmogorov–Smirnov audit ---------------------------------
 
@@ -290,20 +290,37 @@ _BFS_MAX_DEPTH = 8
 _BFS_SEED_MOD = 97
 
 
-def _bfs_parent_map(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The md5-derived parent DAG shared with `sql_recursive`
-    (parent(n) = hash(n) % (1 + n div 8) — strictly decreasing, so
-    the undirected graph is connected through the virtual root 0)."""
-    cust = t(spark, sf_dir, "customer")
-    node = F.col("c_custkey") + 1
-    return cust.select(
-        node.cast("long").alias("node"),
-        (
-            F.conv(F.substring(F.md5(node.cast("string")), 1, 8), 16, 10)
-            .cast("long")
-            % (1 + (node.cast("long") / 8).cast("long"))
-        ).alias("parent"),
-    )
+# One statement, so the traversal is analyzed once. ``adj`` takes one
+# pass over the parent frame; the extra ``(0, NULL)`` row contributes
+# only the root's self loop. The explicit null filter makes every
+# round's ``adj`` subplan identical (left to inference, the last round's
+# differs), so it is built once and reused. Round 1 must still run over
+# the self loops: seeding from ``src % mod = 0`` would also seed parent
+# ids that are not nodes.
+_BFS_ROUNDS = ", ".join(
+    f"""s{r} AS (
+  SELECT a.dst AS node, MIN(s.dist + a.w) AS dist
+  FROM s{r - 1} s JOIN adj a ON s.node = a.src
+  GROUP BY a.dst
+)"""
+    for r in range(1, _BFS_MAX_DEPTH + 1)
+)
+_BFS_SQL = f"""
+WITH adj AS (
+  SELECT src, dst, w
+  FROM (SELECT node, parent FROM {{p}} UNION ALL SELECT 0L, NULL)
+  LATERAL VIEW INLINE(array(
+    struct(node AS src, parent AS dst, 1 AS w),
+    struct(parent AS src, node AS dst, 1 AS w),
+    struct(node AS src, node AS dst,
+           IF(node % {_BFS_SEED_MOD} = 0, 0, NULL) AS w)
+  )) arc
+  WHERE src IS NOT NULL AND dst IS NOT NULL AND w IS NOT NULL
+), s0 AS (
+  SELECT src AS node, CAST(0 AS BIGINT) AS dist FROM adj WHERE w = 0
+), {_BFS_ROUNDS}
+SELECT node, dist FROM s{_BFS_MAX_DEPTH}
+"""
 
 
 def bfs_dist(parents: DataFrame) -> DataFrame:
@@ -311,40 +328,14 @@ def bfs_dist(parents: DataFrame) -> DataFrame:
     over the undirected graph of a ``(node, parent)`` frame plus the
     root 0; vertices past `_BFS_MAX_DEPTH` hops are absent.
 
-    Min-plus relaxation in one lazy plan: ``adj`` holds both edge
+    Min-plus relaxation as one SQL statement: ``adj`` holds both edge
     directions at ``w = 1`` and a ``w = 0`` self loop at each seed, and
     each round keeps ``min(dist + w)`` per far end. After round r the
     state holds the vertices with an r-step walk from a seed, at the
     fewest edges of any such walk; a path of d <= r hops waits r - d
     steps at its seed, so distances are exact.
     """
-    root = parents.sparkSession.range(1).select(
-        F.lit(0).cast("long").alias("node")
-    )
-    seeds = (
-        parents.select("node")
-        .unionByName(root)
-        .filter(F.col("node") % _BFS_SEED_MOD == 0)
-    )
-
-    def arcs(frame: DataFrame, src: str, dst: str, w: int) -> DataFrame:
-        return frame.select(
-            F.col(src).alias("src"), F.col(dst).alias("dst"), F.lit(w).alias("w")
-        )
-
-    adj = (
-        arcs(parents, "node", "parent", 1)
-        .unionByName(arcs(parents, "parent", "node", 1))
-        .unionByName(arcs(seeds, "node", "node", 0))
-    )
-    state = seeds.select("node", F.lit(0).cast("bigint").alias("dist"))
-    for _ in range(_BFS_MAX_DEPTH):
-        state = (
-            state.join(adj, F.col("node") == F.col("src"))
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.min(F.col("dist") + F.col("w")).alias("dist"))
-        )
-    return state
+    return parents.sparkSession.sql(_BFS_SQL, p=parents)
 
 
 @query(
@@ -381,13 +372,14 @@ def graph_bfs_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle's recursion guard).
 
     Scale: past the table open, the body launches no job. `bfs_dist`
-    builds {depth} rounds of min-plus relaxation as one lazy plan, so
-    the whole traversal runs in the caller's single action. The plan
-    grows by one join and one aggregate per round, bounded by the
-    depth cap, not the data. State rows are (node, dist) pairs only,
-    and the integer output is exact under any partitioning.
+    states {depth} rounds of min-plus relaxation as one SQL statement,
+    analyzed once, so the whole traversal runs in the caller's single
+    action. Its edge list scans `customer` once and every round reuses
+    it. The plan grows by one join and one aggregate per round,
+    bounded by the depth cap, not the data. State rows are (node, dist)
+    pairs only, and the integer output is exact under any partitioning.
     """
-    return bfs_dist(_bfs_parent_map(spark, sf_dir))
+    return bfs_dist(md5_parent_map(spark, sf_dir))
 
 
 graph_bfs_dist.__doc__ = graph_bfs_dist.__doc__.format(depth=_BFS_MAX_DEPTH)

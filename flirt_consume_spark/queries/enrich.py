@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from flirt_consume_spark.io import cache_path
-from flirt_consume_spark.queries.base import query, t
+from flirt_consume_spark.queries.base import md5_parent_map, query, t
 
 
 @query(
@@ -815,25 +815,14 @@ def sql_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
     it is dimension-sized) so per-iteration cost is the join, not a
     parquet re-scan. DuckDB replays identical md5 arithmetic in its
     own recursive CTE."""
-    cust = t(spark, sf_dir, "customer")
-    node = F.col("c_custkey") + 1
     parents = (
-        cust.select(
-            node.alias("node"),
-            (
-                F.conv(
-                    F.substring(F.md5(node.cast("string")), 1, 8), 16, 10
-                ).cast("long")
-                % (1 + (node.cast("long") / 8).cast("long"))
-            ).alias("parent"),
-        )
+        md5_parent_map(spark, sf_dir)
         .coalesce(1)
         # eager localCheckpoint: materialized once before the iterative
         # plan references it (replaces cache()+count(), and leaves no
         # CacheManager entry for a later invocation to warm from)
         .localCheckpoint(eager=True)
     )
-    parents.createOrReplaceTempView("par_rec")
     # The recursion emits ~nodes x depth rows across iterations, so the
     # default 1M-row dev guard (spark.sql.cteRecursionRowLimit) trips at
     # ~100x local scale already. Raised to a FINITE 1e8 (not -1): the
@@ -847,15 +836,16 @@ def sql_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
         """
         WITH RECURSIVE walk AS (
           SELECT node, parent AS cur, CAST(1 AS BIGINT) AS depth
-          FROM par_rec
+          FROM {p}
           UNION ALL
-          SELECT w.node, p.parent, w.depth + 1
-          FROM walk w JOIN par_rec p ON p.node = w.cur
+          SELECT w.node, par.parent, w.depth + 1
+          FROM walk w JOIN {p} par ON par.node = w.cur
           WHERE w.cur > 0
         )
         SELECT node, cur AS root, depth
         FROM walk WHERE cur = 0
-        """
+        """,
+        p=parents,
     )
 
 

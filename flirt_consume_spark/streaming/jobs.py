@@ -6,7 +6,10 @@ batch analogue on the same files (SURVEY.md §5.5).
 
 Scale notes: windowed aggregations keep per-key state in the executor
 state stores; watermarks bound that state (without one, 100 TB of
-stream history accumulates). All jobs here take an explicit watermark.
+stream history accumulates). All jobs here take an explicit watermark,
+but a watermark evicts only state keyed by its event-time column:
+``stream_dedup`` keys on ``event_id`` alone, so its state grows with
+the number of distinct events (``stream_dedup_within`` is bounded).
 """
 
 from __future__ import annotations
@@ -158,9 +161,12 @@ def ohlc_agg(
 
 
 def stream_dedup(events: DataFrame, watermark: str = "10 minutes") -> DataFrame:
-    """T5: exactly-once by natural key — watermarked dropDuplicates;
-    state for keys older than the watermark is purged (the reference's
-    idempotent re-consume semantics, keyed by event_id)."""
+    """T5: exactly-once by natural key — dropDuplicates on event_id
+    (the reference's idempotent re-consume semantics). Spark evicts
+    dedup state only when the key holds the watermarked event-time
+    column, and ``event_id`` alone does not, so the state keeps one row
+    per distinct event for the life of the query whatever the
+    watermark. ``stream_dedup_within`` is the bounded-state variant."""
     src = events.withWatermark("ts", watermark) if events.isStreaming else events
     return src.dropDuplicates(["event_id"])
 

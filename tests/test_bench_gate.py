@@ -349,3 +349,12 @@ def test_reanchor_refuses_artifact_without_unaffected_keys(tmp_path):
     assert "Traceback" not in proc.stderr
     assert "no unaffected key" in proc.stdout
     assert base.read_text() == base_text
+
+
+def test_full_artifact_copy_is_named_for_its_master():
+    # Each leg's numbers land in their own file, so the 8-core leg
+    # cannot overwrite the 32-core artifact.
+    from bench import protocol_artifact_name
+
+    assert protocol_artifact_name("local[32]") == "BENCH_FULL_local32.json"
+    assert protocol_artifact_name("local[8]") == "BENCH_FULL_local8.json"

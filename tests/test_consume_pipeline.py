@@ -62,6 +62,16 @@ def test_consume_end_to_end(spark, tmp_path):
     assert bad == 0
     assert legs.filter(F.col("duration_min") > 0).count() > 0
 
+    # E2 arrival: the destination airport's own offset turns the
+    # absolute arrival back into the published local wall-clock
+    offsets = {r.code: r.utc_offset_min for r in airports.collect()}
+    rows = legs.filter(F.col("d_offset") != F.col("o_offset")).limit(200).collect()
+    assert rows
+    for row in rows:
+        assert row.d_offset == offsets[row.dest]
+        arr_local = row.arr_ts_utc + datetime.timedelta(minutes=row.d_offset)
+        assert arr_local.strftime("%H:%M") == row.arr_time_local
+
     # J2 invariant: unknown-airport report == schedules with dangling refs
     ap_codes = {r.code for r in airports.collect()}
     valid = filter_valid_schedules(sched).collect()

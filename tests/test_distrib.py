@@ -157,6 +157,21 @@ def test_bfs_body_runs_no_job_beyond_the_table_open(spark, jobs_started):
     assert n_body == n_open
 
 
+def test_bfs_builds_its_edge_list_once(spark, jobs_started):
+    """Every round reuses one edge list read in one scan of `customer`:
+    the final adaptive plan holds at most 3 parquet scans, and the
+    key, build and action together, runs at most 11 jobs."""
+    plans = []
+
+    def run():
+        df = REGISTRY["graph_bfs_dist"].fn(spark, SF)
+        df.collect()
+        plans.append(df._jdf.queryExecution().executedPlan().executedPlan())
+
+    assert jobs_started(run) <= 11
+    assert plans[0].toString().count("FileScan parquet") <= 3
+
+
 def test_reservoir_is_exact_topk_per_source(spark):
     docs = load_table(spark, SF, "documents").select("source", "doc_id").toPandas()
     got = REGISTRY["sample_reservoir"].fn(spark, SF).collect()

@@ -36,7 +36,7 @@ KEYS = [
     "join_asof",  # union + running scan
     "join_setsim",  # LSH banding + verify
     "graph_pagerank",  # fixed-round iterative joins
-    "graph_bfs_dist",  # unrolled lazy relaxation rounds
+    "graph_bfs_dist",  # min-plus rounds in one SQL statement
     "graph_kcore",  # peel loop
     "dedup_components_star",  # star-contraction loop
     "emb_kmeans",  # Lloyd's with driver centroid collect

@@ -652,6 +652,17 @@ def test_sql_recursive_matches_python_walk(spark):
         assert r.depth == _py_walk_depth(r.node), r
 
 
+def test_sql_frame_arguments_leave_no_temp_view(spark):
+    """The keys that hand a frame to ``spark.sql`` leave the session's
+    temp views as they found them (a fresh session starts with none)."""
+    from flirt_consume_spark.queries import REGISTRY
+
+    fresh = spark.newSession()
+    for key in ("sql_recursive", "graph_bfs_dist"):
+        REGISTRY[key].fn(fresh, "/root/testdata/sf0.001").count()
+    assert [t.name for t in fresh.catalog.listTables() if t.isTemporary] == []
+
+
 @settings(max_examples=10, deadline=None, suppress_health_check=list(HealthCheck))
 @given(
     vals=st.lists(
