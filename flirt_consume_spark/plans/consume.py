@@ -24,6 +24,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from flirt_consume_spark.operators.temporal import expand_schedule
 from flirt_consume_spark.schemas import AIRPORTS, SCHEDULES
@@ -196,23 +197,25 @@ def destination_distribution(
 ) -> DataFrame:
     """§3.1.3 simulator read path: seat-weighted destination
     probabilities for flights departing `origin` in [start, end] —
-    the distribution FLIRT samples for Monte-Carlo passenger routing."""
+    the distribution FLIRT samples for Monte-Carlo passenger routing.
+
+    The normalizer is a partition-less window over the per-destination
+    aggregate, which is coalesced to one partition first. That single
+    partition satisfies both the window and the global sort, so a
+    lookup plans no exchange after the hash aggregate and runs as two
+    Spark jobs (map stage, result). It holds at most one row per
+    destination, so its size is bounded by the airport count at any
+    scale; Spark's "No Partition Defined for Window operation" warning
+    is expected here. The plan stays lazy, and an empty window yields
+    zero rows, not NULL probabilities."""
     window = legs.filter(
         (F.col("orig") == origin)
         & F.col("leg_date").between(start, end)
     )
     by_dest = window.groupBy("dest").agg(F.sum("seats").alias("seats"))
-    # Normalizer as a broadcast 1-row aggregate, not a driver-side
-    # collect: keeps the pipeline end-to-end lazy (view/stream
-    # composable), and an empty window yields an empty result instead
-    # of NULL probabilities.
-    total = by_dest.agg(F.sum("seats").alias("_total"))
+    total = F.sum("seats").over(Window.partitionBy())
     return (
-        by_dest.crossJoin(F.broadcast(total))
-        .select(
-            "dest",
-            "seats",
-            F.round(F.col("seats") / F.col("_total"), 6).alias("probability"),
-        )
+        by_dest.coalesce(1)
+        .select("dest", "seats", F.round(F.col("seats") / total, 6).alias("probability"))
         .orderBy(F.col("seats").desc(), "dest")
     )

@@ -415,14 +415,12 @@ _DIST_SQL = """
       FROM v_orders o JOIN v_customer c ON o.o_custkey = c.c_custkey
       WHERE o.o_orderstatus <> 'F'
       GROUP BY c.c_mktsegment
-    ), tot AS (
-      SELECT SUM(cents) AS tot_cents FROM seg
     )
     SELECT segment, n_orders,
            CAST(CAST(cents AS DOUBLE) / 1e2 AS DOUBLE) AS seg_value,
-           floor(CAST(cents AS DOUBLE) / CAST(tot_cents AS DOUBLE) * 1e6)
+           floor(CAST(cents AS DOUBLE) / CAST(SUM(cents) OVER () AS DOUBLE) * 1e6)
              / 1e6 AS share
-    FROM seg CROSS JOIN tot
+    FROM seg
     """
 
 
@@ -436,11 +434,11 @@ def sql_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Catalog/SQL surface (§3.1.3 read path, SQL form): register the
     tables as temp views and run the weighted-distribution query —
     the SQL twin of plans/consume.destination_distribution — through
-    ``spark.sql``. Identical text runs on DuckDB as the oracle (the
-    normalizing total is a 1-row CTE cross-joined back: lazy,
-    empty-safe, and exactly the broadcast shape Spark plans for it).
-    Exact integer-cents sums; the share divides two exact BIGINTs in
-    IEEE double on both engines."""
+    ``spark.sql``. Identical text runs on DuckDB as the oracle. The
+    normalizing total is a ``SUM(cents) OVER ()`` window over the
+    per-segment aggregate (≤5 rows): one pass over ``seg``, lazy, and
+    empty-safe. Exact integer-cents sums; the share divides two exact
+    BIGINTs in IEEE double on both engines."""
     t(spark, sf_dir, "orders").createOrReplaceTempView("v_orders")
     t(spark, sf_dir, "customer").createOrReplaceTempView("v_customer")
     return spark.sql(_DIST_SQL)

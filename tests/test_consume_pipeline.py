@@ -5,9 +5,12 @@ the simulator read path. Golden invariants from FIXTURES.md §B."""
 from __future__ import annotations
 
 import datetime
+from decimal import ROUND_HALF_UP, Decimal
 
+import pytest
 from pyspark.sql import functions as F
 
+from flirt_consume_spark.io import write_partitioned
 from flirt_consume_spark.plans.consume import (
     consume_schedules,
     destination_distribution,
@@ -89,13 +92,70 @@ def test_consume_end_to_end(spark, tmp_path):
     assert spark.read.parquet(out).count() == n_legs
 
 
-def test_simulator_read_path(spark):
-    airports = synth_airports(spark)
-    legs, _ = consume_schedules(synth_schedules(spark), airports)
-    origin = legs.groupBy("orig").count().orderBy(F.desc("count")).first().orig
-    dist = destination_distribution(legs, origin, "2024-01-01", "2024-03-31")
+@pytest.fixture(scope="module")
+def sunk_legs(spark, tmp_path_factory):
+    """Synthetic legs written month-partitioned and read back, as the
+    ingest benchmark's lookups see them."""
+    legs, _ = consume_schedules(synth_schedules(spark), synth_airports(spark))
+    path = str(tmp_path_factory.mktemp("sink") / "legs")
+    write_partitioned(legs, path, ("month_key",))
+    return spark.read.parquet(path)
+
+
+def _busiest_origin(legs):
+    return legs.groupBy("orig").count().orderBy(F.desc("count"), "orig").first().orig
+
+
+def _lookup_reference(legs_pd, origin, start, end):
+    """pandas recomputation of ``destination_distribution``: Spark's
+    ``round(x, 6)`` rounds the double's decimal form half-up."""
+    lo, hi = datetime.date.fromisoformat(start), datetime.date.fromisoformat(end)
+    w = legs_pd[(legs_pd.orig == origin) & (legs_pd.leg_date >= lo) & (legs_pd.leg_date <= hi)]
+    by = w.groupby("dest", as_index=False)["seats"].sum()
+    by = by.sort_values(["seats", "dest"], ascending=[False, True])
+    total = int(by.seats.sum())
+    return [
+        (d, int(s), float(Decimal(repr(s / total)).quantize(Decimal("1e-6"), ROUND_HALF_UP)))
+        for d, s in by.itertuples(index=False)
+    ]
+
+
+def test_simulator_read_path(sunk_legs):
+    origin = _busiest_origin(sunk_legs)
+    dist = destination_distribution(sunk_legs, origin, "2024-01-01", "2024-03-31")
     rows = dist.collect()
     assert rows, "busiest origin must have departures in the window"
     total_p = sum(r.probability for r in rows)
     assert abs(total_p - 1.0) < 1e-3
     assert all(r.probability > 0 for r in rows)
+
+
+def test_lookup_rows_match_pandas(sunk_legs):
+    legs_pd = sunk_legs.select("orig", "dest", "seats", "leg_date").toPandas()
+    origin = _busiest_origin(sunk_legs)
+    windows = [
+        (origin, "2024-01-01", "2024-03-31"),
+        (origin, "2024-02-01", "2024-02-10"),
+        (min(legs_pd.orig), "2024-01-10", "2024-01-24"),
+        (origin, "2030-01-01", "2030-01-31"),  # no departures
+    ]
+    sizes = []
+    for orig, start, end in windows:
+        got = [tuple(r) for r in destination_distribution(sunk_legs, orig, start, end).collect()]
+        assert got == _lookup_reference(legs_pd, orig, start, end), (orig, start, end)
+        sizes.append(len(got))
+    assert all(sizes[:-1]) and sizes[-1] == 0, sizes
+
+
+def test_lookup_starts_at_most_two_jobs(sunk_legs, jobs_started):
+    """The normalizer adds no exchange after the hash aggregate: the
+    map stage and the result are the only jobs."""
+    origin = _busiest_origin(sunk_legs)
+    rows = []
+    n_jobs = jobs_started(
+        lambda: rows.extend(
+            destination_distribution(sunk_legs, origin, "2024-01-01", "2024-03-31").collect()
+        )
+    )
+    assert rows
+    assert n_jobs <= 2, n_jobs

@@ -77,15 +77,15 @@ ALLOW = {
     "join_similarity": {"nested_loop"},
     "llm_simhash": {"nested_loop"},
     "win_ntile": {"nested_loop"},
-    # 1-row normalizing-total CTE cross-joined back (lazy scalar
-    # broadcast — the same shape destination_distribution plans).
-    "sql_distribution": {"nested_loop"},
+    # Normalizing total as SUM(...) OVER () — a window over ≤5
+    # segment rows (the one-pass shape destination_distribution plans).
+    "sql_distribution": {"single_partition_window"},
     # Global-order window over a bounded input, documented as surface
     # coverage (llm_editdist: adjacent-pair verify over a 200-doc
     # slice).
     "llm_editdist": {"single_partition_window"},
-    # nested_loop: 1-row corpus-count broadcast for the idf (same
-    # lazy-scalar shape as sql_distribution). single_partition_window
+    # nested_loop: 1-row corpus-count broadcast for the idf (the
+    # lazy-scalar shape). single_partition_window
     # is a heuristic false positive here: the flag can't associate
     # nodes, and this plan contains BOTH a scalar count (whose final
     # agg is legitimately SinglePartition, 1 row) AND a window that is

@@ -262,6 +262,10 @@ def main() -> None:
         # Depth-capped min-plus BFS: one lazy plan of a join and an
         # aggregate per round; rows per round track the node count.
         timed(f"bfs_x{n}", _bfs(spark, cu_cnt * n)),
+        # Simulator lookup over N x schedules and N x airports: the
+        # scan and the aggregate's input grow, while the one partition
+        # the normalizer window runs in holds one row per destination.
+        timed(f"lookup_x{n}", _lookup(spark, n)),
         # Hierarchical reservoir top-k: no whole-group window.
         timed(f"reservoir_x{n}", _rsv(docs_n)),
         # Gram-novelty: narrow per-doc distinct shingles -> first-seen
@@ -366,6 +370,7 @@ def main() -> None:
         timed("ks_x1", _ks(od)),
         timed("interp_x1", _interp(load_table(spark, args.sf, "events"))),
         timed("bfs_x1", _bfs(spark, cu_cnt)),
+        timed("lookup_x1", _lookup(spark, 1)),
         timed("reservoir_x1", _rsv(docs)),
         timed("novelty_x1", _novelty(docs)),
         timed("mwu_x1", _mwu(od)),
@@ -406,7 +411,7 @@ def main() -> None:
                  "pctile",
                  "gini", "ancestors", "cov", "simjoin",
                  "powiter", "starcc", "q17", "recursive",
-                 "ks", "interp", "bfs", "reservoir",
+                 "ks", "interp", "bfs", "lookup", "reservoir",
                  "novelty", "mwu", "rle", "pcaproj", "bpe",
                  "holt", "semdedup", "basket", "assort",
                  "jaccard", "bollinger", "kcore", "crossdedup",
@@ -1078,6 +1083,20 @@ def _bfs(spark, n_nodes: int) -> DataFrame:
             % (1 + (node / 8).cast("long"))
         ).alias("parent"),
     ))
+
+
+def _lookup(spark, n: int) -> DataFrame:
+    from flirt_consume_spark.plans.consume import (
+        consume_schedules,
+        destination_distribution,
+        synth_airports,
+        synth_schedules,
+    )
+
+    legs, _ = consume_schedules(
+        synth_schedules(spark, n=500 * n, n_airports=50 * n), synth_airports(spark, 50 * n)
+    )
+    return destination_distribution(legs, "AAA", "2024-01-01", "2024-03-31")
 
 
 def _rsv(docs: DataFrame) -> DataFrame:
