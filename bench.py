@@ -74,6 +74,18 @@ def materialize(df) -> None:
     df.write.mode("overwrite").format("noop").save()
 
 
+def time_invocation(spark, fn, sf_dir: str) -> float:
+    """Wall seconds of one cold invocation of ``fn(spark, sf_dir)``,
+    timed as ``main`` times a key: the CacheManager is cleared before
+    the clock starts, then the build and the noop write run inside it.
+    ``tools/solo_bench.py`` and ``tools/probe_scale.py`` time through
+    this."""
+    spark.catalog.clearCache()
+    t0 = time.time()
+    materialize(fn(spark, sf_dir))
+    return time.time() - t0
+
+
 def warmup(spark, sf_dir: str) -> None:
     """Untimed session warm-up: JVM/codegen init, parquet footer reads,
     and Python-worker pool spin-up (first Arrow exchange costs ~10s),

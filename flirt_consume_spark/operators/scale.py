@@ -966,14 +966,12 @@ def stage_percentile_rank(
     tiebreak: list,
     max_groups: int = MAX_BROADCAST_GROUPS,
 ) -> tuple[DataFrame, DataFrame]:
-    """The data-sized stage of ``grouped_percentiles``, split out so
-    callers can persist and reuse it across queries/percentile sets
-    over the same (table, group, value) — a session_state-cacheable
-    pair of (ranked rows with ``_pr``, guarded per-group counts with
-    ``_pn``). The range shuffle behind the rank is the only
-    data-sized cost of a percentile query; everything after it is
-    |groups|-sized, so staging here turns the second percentile
-    request into a broadcast join over an already-ranked frame.
+    """The data-sized stage of ``grouped_percentiles``: the pair of
+    (ranked rows with ``_pr``, guarded per-group counts with ``_pn``).
+    The range shuffle behind the rank is the only data-sized cost of a
+    percentile query; everything after it is |groups|-sized. It is
+    split out so a key can feed the pair to ``percentile_selection``
+    directly, as ``agg_winsorize`` and ``agg_percentile`` do.
 
     NULLs in ``value_col`` are dropped here (the F.percentile /
     percentile_cont NULL-skipping contract — see
@@ -999,14 +997,13 @@ def stage_percentile_rank(
 
 
 def grouped_percentiles(
-    df: DataFrame | None,
+    df: DataFrame,
     group_cols: list[str],
     value_col: str,
     tiebreak: list,
     ps: list[float],
     out_cols: list[str],
     max_groups: int = MAX_BROADCAST_GROUPS,
-    staged: tuple[DataFrame, DataFrame] | None = None,
 ) -> DataFrame:
     """Exact percentile_cont per group — linear interpolation at
     position h = (n−1)·p on the sorted doubles in the TWO-WEIGHT
@@ -1041,16 +1038,10 @@ def grouped_percentiles(
     tiebreak) must be a total order over the non-null rows. Returns
     one row per group with one DOUBLE column per entry of ``ps``
     (named by ``out_cols``).
-
-    ``staged``: a prebuilt ``stage_percentile_rank`` pair; when given,
-    ``df``/``tiebreak`` are unused (pass None/[]) — callers that
-    persist the stage (and the ``percentile_selection`` it feeds)
-    amortize the range shuffle across repeated percentile queries.
     """
-    if staged is None:
-        staged = stage_percentile_rank(
-            df, list(group_cols), value_col, tiebreak, max_groups
-        )
+    staged = stage_percentile_rank(
+        df, list(group_cols), value_col, tiebreak, max_groups
+    )
     j = percentile_selection(staged, group_cols, ps, out_cols)
     return percentiles_from_selection(j, group_cols, value_col, out_cols)
 

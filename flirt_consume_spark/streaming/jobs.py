@@ -337,70 +337,6 @@ def write_monthly_sink(
     q.awaitTermination()
 
 
-def user_running_totals_tws(events: DataFrame, watermark: str = "60 minutes") -> DataFrame:
-    """T6 (Spark 4 API): the same running per-user counters via
-    transformWithStateInPandas — ValueState in exact integer
-    micro-units, updated per micro-batch. Both the processor class and
-    its instance live inside this function so cloudpickle ships them
-    by value (executors never import this package).
-
-    ENVIRONMENT GATE: the TWS state protocol speaks protobuf
-    (pyspark.sql.streaming.proto.StateMessage_pb2) — without the
-    ``protobuf`` package the worker crashes with a bare
-    "driver worker exited unexpectedly", so fail early and clearly
-    here instead. Also requires the RocksDB state store provider.
-    """
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError as e:
-        raise ImportError(
-            "transformWithStateInPandas requires the 'protobuf' package "
-            "(pyspark's TWS state server protocol); use "
-            "user_running_totals (applyInPandasWithState) instead"
-        ) from e
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState(
-                "totals", "n BIGINT, total_micro BIGINT, last_us BIGINT"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, total_micro, last_us = (
-                self._state.get() if self._state.exists() else (0, 0, 0)
-            )
-            for pdf in rows:
-                n += len(pdf)
-                total_micro += int(round(pdf["value"].sum() * 1_000_000))
-                last_us = max(
-                    last_us, int(pdf["ts"].astype("int64").max() // 1000)
-                )
-            self._state.update((n, total_micro, last_us))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "total_value": [f"{total_micro / 1_000_000:.6f}"],
-                    "last_ts": [pd.Timestamp(last_us, unit="us")],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    src = events.withWatermark("ts", watermark)
-    return src.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=RunningTotals(),
-        outputStructType=RUNNING_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
 CDC_LOG_SCHEMA = StructType(
     [
         StructField("key", LongType()),

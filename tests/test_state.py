@@ -16,9 +16,10 @@ Policy, pinned here:
   ``localCheckpoint``) are the ones correctness needs or a
   cleared-cache A/B showed to pay on their key (see the policy note
   at the end of queries/base.py). They are honest because the BENCH
-  clears the CacheManager before every timed invocation (bench.py,
-  default on; tools/solo_bench.py ditto), so no timed sample can be
-  served from a previous invocation's blocks;
+  clears the CacheManager before every timed invocation (bench.py, and
+  tools/solo_bench.py and tools/probe_scale.py through
+  ``bench.time_invocation``), so no timed sample can be served from a
+  previous invocation's blocks;
 - the per-invocation builds stay sf-correct when one session queries
   two sf_dirs back and forth.
 """
@@ -73,6 +74,22 @@ def test_bench_clears_cache_before_every_invocation():
     assert run_once.index("clearCache()") < timed, (
         "the cache must be cleared before the timed region starts"
     )
+    # The tools that time keys one by one share bench.time_invocation,
+    # which holds the same guarantee.
+    helper = src.split("def time_invocation", 1)[1].split("\ndef ", 1)[0]
+    clears = re.findall(r"^( *)spark\.catalog\.clearCache\(\)", helper, re.M)
+    assert clears == [" " * 4], (
+        "time_invocation must clearCache() unconditionally, at "
+        "function-body level"
+    )
+    assert helper.index("clearCache()") < helper.index("t0 = time.time()")
+    for tool in ("solo_bench.py", "probe_scale.py"):
+        with open(os.path.join(REPO, "tools", tool)) as fh:
+            tool_src = fh.read()
+        assert "bench.time_invocation(" in tool_src, tool
+        assert "time.time()" not in tool_src, (
+            f"{tool} must time through bench.time_invocation"
+        )
 
 
 def test_clear_cache_defeats_cross_invocation_reuse(spark):

@@ -184,30 +184,6 @@ def test_watermark_drops_late_events(spark, tmp_path):
     assert by_win.get("2024-03-01 12:00:00") == [1], by_win
 
 
-def test_stateful_transform_with_state(spark, source_dir, tmp_path):
-    """T6 via the Spark 4 transformWithStateInPandas API — same
-    semantics as the applyInPandasWithState job. Skips when protobuf
-    (the TWS state-server protocol dependency) is absent; the gate in
-    jobs.user_running_totals_tws raises the same condition early."""
-    pytest.importorskip("google.protobuf")
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    stream = jobs.read_events_stream(spark, source_dir)
-    got = _drain(
-        spark, jobs.user_running_totals_tws(stream), "t_tws", tmp_path, "update"
-    )
-    batch = (
-        load_table(spark, SF, "events")
-        .groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    got_counts = {r.user_id: r.n_events for r in got.collect()}
-    want_counts = {r.user_id: r.n for r in batch.collect()}
-    assert got_counts == want_counts
-
-
 def test_stream_stream_interval_join_equals_batch(spark, source_dir, tmp_path):
     """T8: view→click interval join under readStream == the same join
     on the batch read of the same files."""

@@ -1,12 +1,13 @@
 """Solo per-key micro-bench for optimization work (round 12).
 
-Times the given registry keys in one Spark session with the bench's
-noop-sink methodology (N interleaved reps, median/min/first), and can
+Times the given registry keys in one Spark session as bench.py does
+(``bench.time_invocation``: clearCache, then build and noop write inside
+the clock; N interleaved reps, median/min/first), and can
 dump `.explain("formatted")` for each key to a directory — the raw
 material for plans/r12/<key>_{before,after}.txt.
 
 Usage:
-    python tools/solo_bench.py [--sf DIR] [--reps N]
+    python tools/solo_bench.py --sf DIR [--reps N]
         [--explain-dir plans/r12 --suffix before] key [key ...]
 """
 
@@ -17,7 +18,6 @@ import json
 import os
 import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -27,19 +27,10 @@ from flirt_consume_spark.session import get_spark
 
 def main() -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
+    ap.add_argument("--sf", required=True)
     ap.add_argument("--reps", type=int, default=5)
     ap.add_argument("--explain-dir", default=None)
     ap.add_argument("--suffix", default="before")
-    ap.add_argument(
-        "--clear",
-        action=argparse.BooleanOptionalAction,
-        default=True,
-        help="clearCache() before every rep (default on, matching "
-        "bench.py r13): every sample is a true cold invocation — no "
-        "CacheManager reuse across reps. --no-clear restores the "
-        "legacy warm mode for diagnosis.",
-    )
     ap.add_argument("keys", nargs="+")
     args = ap.parse_args()
 
@@ -65,12 +56,10 @@ def main() -> int:
     samples: dict[str, list[float]] = {k: [] for k in args.keys}
     for _rep in range(args.reps):
         for key in args.keys:
-            if args.clear:
-                spark.catalog.clearCache()
             spark.sparkContext.setJobDescription(f"solo:{key}")
-            t0 = time.time()
-            bench.materialize(REGISTRY[key].fn(spark, args.sf))
-            samples[key].append(time.time() - t0)
+            samples[key].append(
+                bench.time_invocation(spark, REGISTRY[key].fn, args.sf)
+            )
             spark.sparkContext.setJobDescription(None)
     out = {}
     for key, vals in samples.items():
