@@ -6,9 +6,10 @@ Prints ONE JSON line:
    "queries_first": {...}, "sf": "..."}
 
 "queries" is the per-key MEDIAN across reps; "queries_first" is the
-COLD rep-1 time (ADVICE r8: keys with session-cached staged
-intermediates run warm on reps 2+, so the median alone can make a
-caching artifact look like a plan win).
+rep-1 time. Every rep runs cold (the CacheManager is cleared before
+each invocation, see below), so rep 1 differs from later reps only by
+noise; the field stays so artifacts from before round 13, when reps
+2+ could hit session-cached intermediates, remain comparable.
 
 Materialization uses the noop sink (full execution on executors, no
 driver-side row transfer), so timings measure the query plan, not
@@ -75,11 +76,11 @@ def materialize(df) -> None:
 
 
 def time_invocation(spark, fn, sf_dir: str) -> float:
-    """Wall seconds of one cold invocation of ``fn(spark, sf_dir)``,
-    timed as ``main`` times a key: the CacheManager is cleared before
-    the clock starts, then the build and the noop write run inside it.
-    ``tools/solo_bench.py`` and ``tools/probe_scale.py`` time through
-    this."""
+    """Wall seconds of one cold invocation of ``fn(spark, sf_dir)``:
+    the CacheManager is cleared before the clock starts, then the
+    build and the noop write run inside it. ``main``,
+    ``tools/solo_bench.py`` and ``tools/probe_scale.py`` time every key
+    through this."""
     spark.catalog.clearCache()
     t0 = time.time()
     materialize(fn(spark, sf_dir))
@@ -121,20 +122,12 @@ def main() -> None:
     samples: dict[str, list[float]] = {key: [] for key in sorted(REGISTRY)}
 
     def run_once(key: str) -> None:
-        spec = REGISTRY[key]
-        # Cleared-cache benching: no rep and no sibling key may be
-        # served from a previous invocation's persisted blocks
-        # (CacheManager plan matching did exactly that through r12), so
-        # every timed sample is a cold run from the parquet inputs;
-        # intra-invocation persist() pins still work because they live
-        # and die inside the timed run. Clear OUTSIDE the timed region:
-        # dropping stale blocks is session hygiene, not part of this
-        # query's cost.
-        spark.catalog.clearCache()
-        t0 = time.time()
+        # Cold run: time_invocation clears the CacheManager before its
+        # clock, so no rep and no sibling key is served from an earlier
+        # invocation's persisted blocks.
         try:
-            materialize(spec.fn(spark, sf_dir))
-            samples[key].append(time.time() - t0)
+            secs = time_invocation(spark, REGISTRY[key].fn, sf_dir)
+            samples[key].append(secs)
         except Exception as e:  # noqa: BLE001
             samples[key].append(-1.0)
             print(
@@ -184,12 +177,7 @@ def main() -> None:
         else:
             timings[key] = -1.0
             minimums[key] = -1.0
-        # Cold rep 1, recorded separately (ADVICE r8): keys with
-        # session-cached staged intermediates (semdedup pair kernel,
-        # percentile rank bounds, BPE fit, ...) hit the cache on reps
-        # 2+, so their median measures warm latency.  queries_first
-        # keeps the cache-miss cost visible so round-over-round deltas
-        # can tell a real plan win from a caching artifact.
+        # Rep 1: see "queries_first" in the module docstring.
         firsts[key] = round(vals[0], 3) if vals and vals[0] >= 0 else -1.0
     assert len(timings) == len(REGISTRY), (
         f"bench covered {len(timings)} keys but REGISTRY holds "

@@ -23,7 +23,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def fan_out(df: DataFrame, min_tasks: int | None = None) -> DataFrame:
+def fan_out(df: DataFrame) -> DataFrame:
     """Scale-adaptive parallelism floor for compute-heavy narrow stages.
 
     The guide's unsplittable-input rule (§2.5: "one huge unsplittable
@@ -38,12 +38,9 @@ def fan_out(df: DataFrame, min_tasks: int | None = None) -> DataFrame:
     unchanged, so no shuffle is ever added at the 100-TB design point.
     The repartition moves only the columns already selected (callers
     project first), and its cost at the small end is bounded by the
-    tiny input that made it necessary.
-
-    ``min_tasks`` defaults to ``sparkContext.defaultParallelism`` so
-    the floor tracks the actual core count (the external driver benches
-    at more than one core count; a constant would tune for one of
-    them).
+    tiny input that made it necessary. The floor is
+    ``sparkContext.defaultParallelism``, so it tracks the actual core
+    count rather than a constant tuned for one machine.
 
     The under-parallel probe is the optimizer's STATIC size estimate
     (``optimizedPlan().stats().sizeInBytes``) against
@@ -56,7 +53,7 @@ def fan_out(df: DataFrame, min_tasks: int | None = None) -> DataFrame:
     analyzer/optimizer pass and never executes anything.
     """
     spark = df.sparkSession
-    floor = min_tasks or spark.sparkContext.defaultParallelism
+    floor = spark.sparkContext.defaultParallelism
     try:
         size = int(
             str(
@@ -763,7 +760,7 @@ def local_topk_per_group(
     turns the downstream per-group window from data-sized into
     bounded — the scale answer for top-k-per-group queries that
     neither serializes per group (plain window) nor range-shuffles
-    the full table (ranking_family).
+    the full table (grouped_rank).
 
     Layout pinning: the sorted frame feeds both the min-position leg
     and the filter leg; a lazy local checkpoint freezes one partition
@@ -959,43 +956,6 @@ def grouped_cumsum(
     return out.drop(*drop)
 
 
-def stage_percentile_rank(
-    df: DataFrame,
-    group_cols: list[str],
-    value_col: str,
-    tiebreak: list,
-    max_groups: int = MAX_BROADCAST_GROUPS,
-) -> tuple[DataFrame, DataFrame]:
-    """The data-sized stage of ``grouped_percentiles``: the pair of
-    (ranked rows with ``_pr``, guarded per-group counts with ``_pn``).
-    The range shuffle behind the rank is the only data-sized cost of a
-    percentile query; everything after it is |groups|-sized. It is
-    split out so a key can feed the pair to ``percentile_selection``
-    directly, as ``agg_winsorize`` and ``agg_percentile`` do.
-
-    NULLs in ``value_col`` are dropped here (the F.percentile /
-    percentile_cont NULL-skipping contract — see
-    ``grouped_percentiles``), but the per-group counts come from the
-    UNfiltered frame with ``count(value_col)`` — identical _pn for
-    every group with data, plus an explicit ``_pn = 0`` row for a
-    group whose values are ALL NULL, so the group survives to the
-    output (with NULL percentiles) exactly as the SQL aggregates
-    would emit it."""
-    gnames = list(group_cols)
-    nn = df
-    df = df.where(F.col(value_col).isNotNull())
-    ranked = grouped_rank(
-        df,
-        gnames,
-        [F.col(value_col)] + list(tiebreak),
-        rank_col="_pr",
-        max_groups=max_groups,
-    )
-    cnt = nn.groupBy(*gnames).agg(F.count(F.col(value_col)).alias("_pn"))
-    cnt = _guard_group_count(cnt, max_groups, "grouped_percentiles")
-    return ranked, cnt
-
-
 def grouped_percentiles(
     df: DataFrame,
     group_cols: list[str],
@@ -1028,9 +988,7 @@ def grouped_percentiles(
     NULL values are skipped, matching ``F.percentile`` /
     ``percentile_cont``: they are filtered before the rank and
     excluded from n. A group whose values are ALL NULL is emitted
-    with NULL percentiles — also the built-in convention (the stage
-    counts on the unfiltered frame and the selection unions the
-    ``_pn = 0`` groups back in as bounds-only rows).
+    with NULL percentiles — also the built-in convention.
 
     ``group_cols`` must be bounded-cardinality (grouped_rank's
     broadcast contract, enforced there AND on the per-group bounds
@@ -1039,39 +997,27 @@ def grouped_percentiles(
     one row per group with one DOUBLE column per entry of ``ps``
     (named by ``out_cols``).
     """
-    staged = stage_percentile_rank(
-        df, list(group_cols), value_col, tiebreak, max_groups
-    )
-    j = percentile_selection(staged, group_cols, ps, out_cols)
-    return percentiles_from_selection(j, group_cols, value_col, out_cols)
-
-
-def percentile_selection(
-    staged: tuple[DataFrame, DataFrame],
-    group_cols: list[str],
-    ps: list[float],
-    out_cols: list[str],
-) -> DataFrame:
-    """The rank-bounds selection of ``grouped_percentiles``: join the
-    staged rank against the per-group ⌊h⌋+1 / ⌈h⌉+1 bounds (broadcast
-    — |groups| rows, guarded in the stage) and keep only the rows at
-    those ranks — ≤ 2·|ps| rows per group however large the table.
-    Split out so callers with a persisted stage can ALSO persist this
-    tiny frame: the final interpolation then touches |groups|·2·|ps|
-    rows, nothing data-sized.
-
-    Groups with ``_pn = 0`` (all values NULL — kept by the stage's
-    unfiltered counts) have no ranked rows to select; they are
-    unioned in as bounds-only rows (every ranked column NULL), so the
-    final interpolation emits the group with NULL percentiles — the
-    SQL convention. The union arm is a filter on the |groups|-sized
-    counts frame: nothing data-sized is touched."""
     if len(ps) != len(out_cols):
         raise ValueError("ps and out_cols must align 1:1")
     if not all(0.0 <= p <= 1.0 for p in ps):
         raise ValueError(f"percentiles must be in [0, 1]: {ps}")
     gnames = list(group_cols)
-    ranked, cnt = staged
+    # The range shuffle behind this rank is the only data-sized stage;
+    # everything after it is |groups|-sized.
+    ranked = grouped_rank(
+        df.where(F.col(value_col).isNotNull()),
+        gnames,
+        [F.col(value_col)] + list(tiebreak),
+        rank_col="_pr",
+        max_groups=max_groups,
+    )
+    # Counts come from the UNfiltered frame with count(value_col): the
+    # same n for every group with data, plus an explicit _pn = 0 row
+    # for a group whose values are all NULL, so that group survives.
+    cnt = df.groupBy(*gnames).agg(F.count(F.col(value_col)).alias("_pn"))
+    cnt = _guard_group_count(cnt, max_groups, "grouped_percentiles")
+    # Per-group rank bounds ⌊h⌋+1 / ⌈h⌉+1 and weights, broadcast
+    # against the rank: only the rows at those ranks are kept.
     sel = [*gnames]
     keep = F.lit(False)
     for p, oc in zip(ps, out_cols):
@@ -1089,21 +1035,12 @@ def percentile_selection(
         )
     b = cnt.select(*sel, "_pn")
     matched = _nullsafe_equi_join(ranked, F.broadcast(b), gnames).filter(keep)
-    empty_groups = b.filter(F.col("_pn") == 0)
-    return matched.unionByName(
-        empty_groups, allowMissingColumns=True
+    # All-NULL groups have no ranked rows to select; they join back as
+    # bounds-only rows (a filter on the |groups|-sized counts), so the
+    # interpolation below emits them with NULL percentiles.
+    j = matched.unionByName(
+        b.filter(F.col("_pn") == 0), allowMissingColumns=True
     ).drop("_pn")
-
-
-def percentiles_from_selection(
-    j: DataFrame,
-    group_cols: list[str],
-    value_col: str,
-    out_cols: list[str],
-) -> DataFrame:
-    """Final interpolation over a ``percentile_selection`` frame: one
-    hash agg emitting the two-weight form per requested percentile."""
-    gnames = list(group_cols)
 
     def _at(rank_col: str) -> Column:
         return F.max(F.when(F.col("_pr") == F.col(rank_col), F.col(value_col)))
@@ -1312,112 +1249,17 @@ def bucketized_weighted_quantile(
 
 
 def ntile_expr(rank_col: str, total_col: str, k: int) -> Column:
-    """Exact ntile(k) from a row_number and a group total: the first
-    n % k tiles get ceil(n/k) rows, the rest floor(n/k) — the SQL
-    ntile contract, reproduced from a distributed rank instead of a
-    per-group window (win_ntile/win_rank construction, factored out
-    so the property suite pins it against F.ntile())."""
-    rn, n = F.col(rank_col), F.col(total_col)
-    q = n - (n / k).cast("long") * k  # n % k
-    base = (n / k).cast("long")  # n // k
-    big = q * (base + 1)  # rows covered by the (base+1)-sized tiles
-    return (
-        F.when(
-            (rn <= big) | (base == 0),
-            ((rn - 1) / (base + 1)).cast("long") + 1,
-        )
-        .otherwise(q + ((rn - big - 1) / base).cast("long") + 1)
-    )
-
-
-def ranking_family(
-    df: DataFrame,
-    group_cols: list,
-    sem_cols: list,
-    tiebreak: list,
-    k: int = 4,
-    descending: bool = False,
-    max_groups: int = MAX_BROADCAST_GROUPS,
-) -> DataFrame:
-    """The full SQL ranking family — row_number / rank / dense_rank /
-    ntile(k) per group — built from distributed ``grouped_rank``
-    instead of ``Window.partitionBy(group)`` (which plans ONE REDUCER
-    PER GROUP: 5 segments serialize a 100-TB table into 5 tasks).
-
-    Semantics, pinned by tests/test_properties.py against the native
-    window functions across hypothesis-generated tie patterns:
-
-    - ``rn``  = row_number over (sem_cols + tiebreak) — total order.
-    - ``rnk`` = rank over sem_cols alone = min rn of the
-      (group, sem_cols) tie class, joined back on the tie class.
-    - ``drnk`` = dense_rank over sem_cols = grouped_rank of the
-      DISTINCT tie classes (value-domain-sized), joined back.
-    - ``nt``  = ntile(k) over the same total order, from the exact
-      first-(n%k)-tiles-get-ceil(n/k) formula with per-group counts
-      on a broadcast.
-
-    ``group_cols`` and ``sem_cols`` are plain column NAMES (the tie
-    class is a groupBy/join key, so it needs names, not order
-    expressions); ``descending`` flips the sem ordering. ``tiebreak``
-    may be arbitrary ordering expressions; (group, sem, tiebreak)
-    must be a total order.
-    """
-    gnames = list(group_cols)
-    sem_names = list(sem_cols)
-    order = [
-        F.col(c).desc() if descending else F.col(c) for c in sem_names
-    ]
-    # The tie class is carried as ONE derived struct key: struct
-    # equality is per-field null-safe and the struct itself is never
-    # NULL, so a NULL sem value is a legitimate tie class (SQL rank
-    # orders NULLs together) and a NULL group key a legitimate group
-    # — the previous name-list joins (plain EqualTo) silently dropped
-    # every such row from the ranking output. Grouping ties BY the
-    # struct keeps the groupBy exchange's partitioning identical to
-    # the downstream join keys (an eqNullSafe condition instead would
-    # rewrite into coalesce/isnull keys and re-shuffle the tie-class
-    # frames — measured one extra exchange on win_rank, 25 vs 24).
-    # See _nullsafe_equi_join's docstring for the full measured cost
-    # of NULL correctness vs the old NULL-dropping plan (21→24
-    # exchanges, smj 0→2 — accepted).
-    if len(set(gnames + sem_names)) != len(gnames + sem_names):
-        raise ValueError(
-            "ranking_family: group_cols and sem_cols must be disjoint "
-            f"plain column names (got group={gnames}, sem={sem_names}) — "
-            "an overlap would produce duplicate tie-key struct fields "
-            "and ambiguous _tk.<c> re-extraction."
-        )
-    tie_key = F.struct(*[F.col(c) for c in gnames + sem_names])
-    ranked = grouped_rank(
-        df, gnames, order + list(tiebreak),
-        rank_col="rn", max_groups=max_groups,
-    ).withColumn("_tk", tie_key)
-    ties = ranked.groupBy("_tk").agg(F.min("rn").alias("rnk"))
-    dense = grouped_rank(
-        ties.select(
-            "_tk", *[F.col(f"_tk.{c}").alias(c) for c in gnames + sem_names]
-        ),
-        gnames, order, rank_col="drnk", max_groups=max_groups,
-    ).select("_tk", "drnk")
-    cnt = df.groupBy(*gnames).agg(F.count(F.lit(1)).alias("_n"))
-    # Same bounded-cardinality contract as grouped_rank's minima: the
-    # per-group count frame rides a broadcast, so guard it in-plan
-    # (it lives on a different plan branch than grouped_rank's own
-    # guard, which cannot protect this exchange).
-    cnt = _guard_group_count(cnt, max_groups, "ranking_family")
-    # Fold rnk and drnk into ONE tie-class frame before touching the
-    # data-sized side: ties ⋈ dense is tie-class ⋈ tie-class (small),
-    # so the full `ranked` frame is joined back ONCE instead of twice
-    # — every ranked row streams through one merge-join operator
-    # instead of two once the tie-class frames outgrow the broadcast
-    # threshold (~15% off win_rank at sf0.1).
-    tie_ranks = ties.join(dense, "_tk")
-    return (
-        _nullsafe_equi_join(
-            ranked.join(tie_ranks, "_tk").drop("_tk"),
-            F.broadcast(cnt),
-            gnames,
-        )
-        .withColumn("nt", ntile_expr("rn", "_n", k))
-        .drop("_n")
+    """Exact ntile(k) as BIGINT from a row_number and a group total:
+    the first n % k tiles get n DIV k + 1 rows, the rest n DIV k — the
+    SQL ntile contract, reproduced from a distributed rank instead of
+    a per-group window (win_ntile and win_rank; the property suite
+    pins it against F.ntile()). Pure integer arithmetic: DIV, never
+    doubles, which would misround once n passes 2^53."""
+    rn, n, k = f"CAST(`{rank_col}` AS BIGINT)", f"`{total_col}`", int(k)
+    big = f"({n} DIV {k} + 1) * ({n} % {k})"  # rows in the larger tiles
+    return F.expr(
+        f"CAST(CASE WHEN {rn} <= {big}"
+        f" THEN ({rn} - 1) DIV ({n} DIV {k} + 1) + 1"
+        f" ELSE {n} % {k} + ({rn} - 1 - {big})"
+        f" DIV GREATEST({n} DIV {k}, 1) + 1 END AS BIGINT)"
     )

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from flirt_consume_spark.io import with_month_key
 from flirt_consume_spark.operators.temporal import expand_schedule
 from flirt_consume_spark.schemas import AIRPORTS, SCHEDULES
 
@@ -186,7 +187,7 @@ def consume_schedules(
             F.col("dep_ts_utc") + F.col("_dur_sec") * F.expr("INTERVAL 1 SECOND"),
         )
         .withColumn("duration_min", (F.col("_dur_sec") / 60).cast("int"))
-        .withColumn("month_key", F.date_format("dep_ts_utc", "yyyy-MM"))
+        .transform(with_month_key, "dep_ts_utc")
         .drop("_oc", "_dc", "_arr_naive", "_dur_sec")
     )
     return enriched, unknown

@@ -75,28 +75,6 @@ def join_geo(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# agg_winsorize's staged p05/p95 selection over
-# (orders.o_orderstatus, o_totalprice) — the rank and its ≤2-rows-per-
-# percentile-per-group bounds selection, built fresh PER INVOCATION
-# (no cross-invocation memo; r13 — every bench/oracle run recomputes
-# from parquet).
-def _orders_pct_selection(spark: SparkSession, sf_dir: str):
-    from flirt_consume_spark.operators.scale import (
-        percentile_selection,
-        stage_percentile_rank,
-    )
-
-    orders = t(spark, sf_dir, "orders").select(
-        "o_orderstatus", "o_totalprice", "o_orderkey"
-    )
-    staged = stage_percentile_rank(
-        orders, ["o_orderstatus"], "o_totalprice", [F.col("o_orderkey")]
-    )
-    return percentile_selection(
-        staged, ["o_orderstatus"], [0.05, 0.95], ["lo", "hi"]
-    )
-
-
 @query(
     "agg_winsorize",
     oracle="""
@@ -127,19 +105,16 @@ def agg_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     the agg_percentile scale path) in Spark's two-weight
     interpolation form; DuckDB's single-weight quantile_cont can
     differ in the last ulp, so the hash match rests on the exact
-    integer-cents aggregation, not a bit-identical quantile. The
-    rank + rank-bounds selection (everything data-sized) is built
-    via ``stage_percentile_rank`` + ``percentile_selection`` fresh
-    per invocation (nothing is memoised across runs)."""
-    from flirt_consume_spark.operators.scale import (
-        percentiles_from_selection,
-    )
+    integer-cents aggregation, not a bit-identical quantile."""
+    from flirt_consume_spark.operators.scale import grouped_percentiles
 
     orders = t(spark, sf_dir, "orders")
-    pct = percentiles_from_selection(
-        _orders_pct_selection(spark, sf_dir),
+    pct = grouped_percentiles(
+        orders.select("o_orderstatus", "o_totalprice", "o_orderkey"),
         ["o_orderstatus"],
         "o_totalprice",
+        [F.col("o_orderkey")],
+        [0.05, 0.95],
         ["lo", "hi"],
     )
     x = F.col("o_totalprice")

@@ -446,33 +446,6 @@ def agg_conditional(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# agg_percentile's staged percentile selection over
-# (events.event_type, value): the range shuffle behind the rank is the
-# query's only data-sized stage, and the rank-bounds selection it
-# feeds is ≤2 rows per requested percentile per group. Built fresh
-# PER INVOCATION — no cross-invocation memo (r13; every bench/oracle
-# run recomputes).
-_EVENTS_PCT_PS = [0.5, 0.25, 0.75, 0.0, 1.0]
-_EVENTS_PCT_OUT = ["_med", "_p25", "_p75", "_min", "_max"]
-
-
-def _events_pct_selection(spark: SparkSession, sf_dir: str):
-    from flirt_consume_spark.operators.scale import (
-        percentile_selection,
-        stage_percentile_rank,
-    )
-
-    ev = t(spark, sf_dir, "events").select(
-        "event_type", "value", "event_id"
-    )
-    staged = stage_percentile_rank(
-        ev, ["event_type"], "value", [F.col("event_id")]
-    )
-    return percentile_selection(
-        staged, ["event_type"], _EVENTS_PCT_PS, _EVENTS_PCT_OUT
-    )
-
-
 @query(
     "agg_percentile",
     oracle="""
@@ -504,20 +477,19 @@ def agg_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantile needs only the rows at the two neighboring ranks,
     pulled by a broadcast rank-bounds join; min/max are p=0/p=1 on
     the same pass. Post-rank state is ≤10 rows per group however
-    large the table. The rank + rank-bounds selection — everything
-    data-sized — is built via ``stage_percentile_rank`` +
-    ``percentile_selection`` with a lazy per-invocation pin, so one
-    invocation pays the range shuffle once (and nothing is memoised
-    across runs)."""
-    from flirt_consume_spark.operators.scale import (
-        percentiles_from_selection,
-    )
+    large the table."""
+    from flirt_consume_spark.operators.scale import grouped_percentiles
 
-    pct = percentiles_from_selection(
-        _events_pct_selection(spark, sf_dir),
+    ev = t(spark, sf_dir, "events").select(
+        "event_type", "value", "event_id"
+    )
+    pct = grouped_percentiles(
+        ev,
         ["event_type"],
         "value",
-        _EVENTS_PCT_OUT,
+        [F.col("event_id")],
+        [0.5, 0.25, 0.75, 0.0, 1.0],
+        ["_med", "_p25", "_p75", "_min", "_max"],
     )
     return pct.select(
         "event_type",

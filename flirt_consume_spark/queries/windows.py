@@ -141,13 +141,14 @@ def win_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     windowed on survivors: it comes from the exact
     first-(n%k)-tiles-get-ceil(n/k) row-number formula with the tiny
     per-segment count table on a broadcast (the win_ntile
-    construction). The pre-rework ranking_family plan (range-
+    construction, ``ntile_expr``). The pre-rework plan (range-
     partitioned global rank + three keyed join-backs) measured 24
     exchanges / 1.87 s at sf0.1; this shape is 5 tiny exchanges with
     zero full-table shuffles."""
     from flirt_consume_spark.operators.scale import (
         _nullsafe_equi_join,
         local_topk_per_group,
+        ntile_expr,
     )
 
     cust = t(spark, sf_dir, "customer").select(
@@ -174,16 +175,6 @@ def win_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("_n")
     )
     out = _nullsafe_equi_join(fam, F.broadcast(cnts), ["c_mktsegment"])
-    # Exact ntile(4) in pure integer arithmetic (DIV, never doubles —
-    # float division would misround at data-sized n): the first
-    # n%4 tiles take n DIV 4 + 1 rows, the rest n DIV 4.
-    nt = F.expr(
-        "CAST(CASE WHEN rn <= (_n DIV 4 + 1) * (_n % 4) THEN"
-        " (CAST(rn AS BIGINT) - 1) DIV (_n DIV 4 + 1) + 1"
-        " ELSE (_n % 4) +"
-        " (CAST(rn AS BIGINT) - 1 - (_n DIV 4 + 1) * (_n % 4))"
-        " DIV GREATEST(_n DIV 4, 1) + 1 END AS BIGINT)"
-    )
     return out.select(
         "c_custkey",
         "c_mktsegment",
@@ -191,7 +182,7 @@ def win_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("rn").cast("int").alias("rn"),
         F.col("rnk").cast("int").alias("rnk"),
         F.col("drnk").cast("int").alias("drnk"),
-        nt.alias("nt"),
+        ntile_expr("rn", "_n", 4).alias("nt"),
     )
 
 
@@ -320,8 +311,8 @@ def win_ntile(spark: SparkSession, sf_dir: str) -> DataFrame:
         [F.col("o_totalprice"), F.col("o_orderkey")],
         count_col="_n",
     )
-    # Exact ntile formula, shared with ranking_family and pinned
-    # against F.ntile() by the property suite.
+    # Exact ntile formula, shared with win_rank and pinned against
+    # F.ntile() by the property suite.
     tiles = ranked.select(
         "o_totalprice", ntile_expr("rnk", "_n", k).alias("tile")
     )

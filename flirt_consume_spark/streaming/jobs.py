@@ -30,6 +30,7 @@ from pyspark.sql.types import (
 )
 
 from flirt_consume_spark import schemas
+from flirt_consume_spark.io import with_month_key, write_partitioned
 from flirt_consume_spark.session import apply_runtime_confs
 
 
@@ -320,12 +321,8 @@ def write_monthly_sink(
     batch overwrites the same partitions, so replays are idempotent."""
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.withColumn(month_col, F.date_format("ts", "yyyy-MM"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(month_col)
-            .parquet(path)
+        write_partitioned(
+            with_month_key(batch_df, "ts", month_col), path, (month_col,)
         )
 
     q = (

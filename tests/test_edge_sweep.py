@@ -29,9 +29,9 @@ SF = "/root/testdata/sf0.001"
 # pandas-UDF kernels, sketch builders, and plain relational plans.
 KEYS = [
     "agg_route",  # hash agg
-    "agg_percentile",  # staged grouped_percentiles rank path
+    "agg_percentile",  # grouped_percentiles rank path
     "agg_weighted_median",  # bucketized weighted quantile
-    "win_rank",  # ranking_family fold + global_rank checkpoint
+    "win_rank",  # local top-k pre-filter + ntile_expr
     "audit_ks",  # multi-counter global_cumsum
     "join_asof",  # union + running scan
     "join_setsim",  # LSH banding + verify

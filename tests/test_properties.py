@@ -808,9 +808,9 @@ def test_bpe_bracket_replace_equals_tuple_merge(word, merges):
         assert "".join(syms) == word
 
 
-# --- ranking_family vs native window functions (VERDICT r6 #8) ------------
+# --- grouped_rank arithmetic vs native window functions (VERDICT r6 #8) ---
 # The win_rank/win_ntile/win_distribution rewrites re-derive
-# rank/dense_rank/ntile/percent_rank arithmetic from distributed
+# row_number/ntile/percent_rank arithmetic from distributed
 # grouped_rank instead of per-group windows. Pin that arithmetic
 # against the native window functions across hypothesis-generated TIE
 # patterns, so a future edit can't silently diverge from window
@@ -834,30 +834,32 @@ _k = st.integers(min_value=1, max_value=7)
 
 @settings(max_examples=10, deadline=None, suppress_health_check=list(HealthCheck))
 @given(rows=_rank_rows, k=_k)
-def test_ranking_family_matches_native_windows(spark, rows, k):
+def test_grouped_rank_ntile_matches_native_windows(spark, rows, k):
+    """row_number from ``grouped_rank`` plus ``ntile_expr`` over its
+    ``count_col`` group total — the win_rank/win_ntile construction —
+    must equal F.row_number()/F.ntile(k), including NULL groups, ties
+    under the semantic order, and groups smaller than k."""
     from pyspark.sql.window import Window
 
-    from flirt_consume_spark.operators.scale import ranking_family
+    from flirt_consume_spark.operators.scale import grouped_rank, ntile_expr
 
     df = spark.createDataFrame(
         [(g, v, i) for i, (g, v) in enumerate(rows)], "g string, v int, id int"
     )
+    order = [F.col("v").desc(), F.col("id")]
     got = (
-        ranking_family(df, ["g"], ["v"], [F.col("id")], k=k, descending=True)
-        .select("id", "rn", "rnk", "drnk", "nt")
+        grouped_rank(df, ["g"], order, rank_col="rn", count_col="_n")
+        .select("id", "rn", ntile_expr("rn", "_n", k).alias("nt"))
         .collect()
     )
-    w_sem = Window.partitionBy("g").orderBy(F.col("v").desc())
-    w_tot = Window.partitionBy("g").orderBy(F.col("v").desc(), "id")
+    w_tot = Window.partitionBy("g").orderBy(*order)
     want = df.select(
         "id",
         F.row_number().over(w_tot).alias("rn"),
-        F.rank().over(w_sem).alias("rnk"),
-        F.dense_rank().over(w_sem).alias("drnk"),
         F.ntile(k).over(w_tot).alias("nt"),
     ).collect()
-    gmap = {r.id: (r.rn, r.rnk, r.drnk, r.nt) for r in got}
-    wmap = {r.id: (r.rn, r.rnk, r.drnk, r.nt) for r in want}
+    gmap = {r.id: (r.rn, r.nt) for r in got}
+    wmap = {r.id: (r.rn, r.nt) for r in want}
     assert gmap == wmap
 
 

@@ -347,36 +347,22 @@ def test_grouped_percentiles_cardinality_guard(spark):
         ).collect()
 
 
-def test_ranking_family_cardinality_guard(spark):
-    """ranking_family's per-group count broadcast carries the same
-    contract (round-8: previously unguarded)."""
-    from flirt_consume_spark.operators.scale import ranking_family
+def test_ntile_expr_exact_past_double_precision(spark):
+    """ntile_expr divides in BIGINT: past 2^53 a double quotient rounds
+    (2^58 + 1 reads as 2^58), which moves a tile boundary by a row."""
+    from flirt_consume_spark.operators.scale import ntile_expr
 
-    df = load_table(spark, SF, "orders").select(
-        "o_orderkey", "o_orderstatus", "o_totalprice"
+    base = 2**58
+    n = 4 * base + 3  # tiles 1-3 hold base + 1 rows, tile 4 holds base
+    want = [
+        (1, 1), (base + 1, 1), (base + 2, 2), (2 * base + 2, 2),
+        (2 * base + 3, 3), (3 * base + 3, 3), (3 * base + 4, 4), (n, 4),
+    ]
+    df = spark.createDataFrame(
+        [(rn, n) for rn, _ in want], "rn bigint, _n bigint"
     )
-    with pytest.raises(Exception, match="bounded-cardinality"):
-        ranking_family(
-            df, ["o_orderkey"], ["o_totalprice"],
-            [F.col("o_orderstatus")], max_groups=10,
-        ).collect()
-
-
-def test_ranking_family_rejects_overlapping_group_and_sem_cols(spark):
-    """ADVICE r9: an overlap between group_cols and sem_cols would
-    build a tie-key struct with duplicate fields and make the
-    `_tk.<c>` re-extraction ambiguous far from the call site — the
-    contract violation must fail fast at plan-build time."""
-    from flirt_consume_spark.operators.scale import ranking_family
-
-    df = load_table(spark, SF, "orders").select(
-        "o_orderstatus", "o_totalprice", "o_orderkey"
-    )
-    with pytest.raises(ValueError, match="disjoint"):
-        ranking_family(
-            df, ["o_orderstatus"], ["o_orderstatus", "o_totalprice"],
-            [F.col("o_orderkey")],
-        )
+    got = df.select("rn", ntile_expr("rn", "_n", 4).alias("nt")).collect()
+    assert [(r.rn, r.nt) for r in got] == want
 
 
 def test_nullsafe_equi_join_rejects_right_and_full(spark):

@@ -246,7 +246,8 @@ ALLOW = {
     "time_downsample": {"nested_loop", "single_partition_window"},
     # grouped_percentiles (round-7 rewrite of the exact-percentile
     # keys off the buffer-everything F.percentile aggregate): rides
-    # grouped_rank, so it inherits exactly the two nodes above.
+    # grouped_rank and guards its per-group count frame the same way,
+    # so both keys that call it carry exactly the two nodes above.
     "agg_percentile": {"nested_loop", "single_partition_window"},
     "agg_winsorize": {"nested_loop", "single_partition_window"},
 }
