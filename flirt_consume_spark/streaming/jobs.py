@@ -6,10 +6,11 @@ batch analogue on the same files (SURVEY.md §5.5).
 
 Scale notes: windowed aggregations keep per-key state in the executor
 state stores; watermarks bound that state (without one, 100 TB of
-stream history accumulates). All jobs here take an explicit watermark,
-but a watermark evicts only state keyed by its event-time column:
-``stream_dedup`` keys on ``event_id`` alone, so its state grows with
-the number of distinct events (``stream_dedup_within`` is bounded).
+stream history accumulates), so every windowed job here takes an
+explicit watermark. ``stream_dedup`` takes none: a watermark evicts
+only state keyed by its event-time column, and exact dedup by
+``event_id`` must remember every id, so its state holds one row per
+distinct event (``stream_dedup_within`` is the bounded variant).
 """
 
 from __future__ import annotations
@@ -161,15 +162,17 @@ def ohlc_agg(
     )
 
 
-def stream_dedup(events: DataFrame, watermark: str = "10 minutes") -> DataFrame:
+def stream_dedup(events: DataFrame) -> DataFrame:
     """T5: exactly-once by natural key — dropDuplicates on event_id
-    (the reference's idempotent re-consume semantics). Spark evicts
-    dedup state only when the key holds the watermarked event-time
-    column, and ``event_id`` alone does not, so the state keeps one row
-    per distinct event for the life of the query whatever the
-    watermark. ``stream_dedup_within`` is the bounded-state variant."""
-    src = events.withWatermark("ts", watermark) if events.isStreaming else events
-    return src.dropDuplicates(["event_id"])
+    for the life of the query (the reference's idempotent re-consume
+    semantics), the same call on streaming and batch input; the state
+    keeps one row per distinct event. No watermark: with ``ts``
+    outside the key it would evict nothing, yet it would drop new
+    events later than its delay, which the batch analogue keeps, and
+    end every drain with an empty micro-batch. ``stream_dedup_within``
+    is the bounded-state variant, for streams that accept a late
+    duplicate being emitted again."""
+    return events.dropDuplicates(["event_id"])
 
 
 def stream_static_join(events: DataFrame, dim: DataFrame, key_expr) -> DataFrame:
@@ -647,9 +650,9 @@ def stream_dedup_within(events: DataFrame, delay: str = "5 minutes") -> DataFram
     dedup CONTRACT made explicit: duplicates of a key are removed
     only while the key's first arrival is within the watermark delay;
     once the watermark passes it, state evicts and a late re-arrival
-    is emitted AGAIN. Unlike T5's ``dropDuplicates`` (exact key
-    dedup, where duplicate rows must match on the dedup columns and
-    correctness silently depends on state retention), this operator
+    is emitted AGAIN. Unlike T5's ``stream_dedup`` (exact dedup by
+    key for the life of the query, with state that grows by one row
+    per distinct key and is never evicted), this operator
     GUARANTEES state is bounded by the delay and tolerates duplicate
     rows whose event times differ slightly — the semantics a 100-TB
     at-least-once ingest actually wants to declare."""

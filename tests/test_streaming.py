@@ -6,11 +6,13 @@ input files yields the same result under readStream as under read.
 
 from __future__ import annotations
 
+import os
 import shutil
 
 import pytest
 from pyspark.sql import functions as F
 
+from flirt_consume_spark import schemas
 from flirt_consume_spark.io import load_table
 from flirt_consume_spark.streaming import jobs
 
@@ -61,6 +63,77 @@ def test_stream_dedup_drops_duplicate_files(spark, source_dir, tmp_path):
     got = _drain(spark, jobs.stream_dedup(stream), "t_dedup", tmp_path, "append")
     n_src = load_table(spark, SF, "events").count()
     assert got.count() == n_src
+
+
+def _write_event_files(src, frames):
+    """One parquet file per list of (event_id, ts) pairs in
+    ``schemas.EVENTS`` layout, numbered on from the files already in
+    ``src``, with modification times one second apart in that order
+    (the file source takes the oldest first)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    src.mkdir(exist_ok=True)
+    first = len(os.listdir(src))
+    for i, rows in enumerate(frames, start=first):
+        ids = [e for e, _ in rows]
+        table = pa.table({
+            "event_id": pa.array(ids, pa.int64()),
+            "ts": pa.array([ts for _, ts in rows], pa.timestamp("us")),
+            "user_id": pa.array([e % 7 for e in ids], pa.int64()),
+            "event_type": pa.array(["click"] * len(ids)),
+            "value": pa.array([e / 4 for e in ids], pa.float64()),
+            "props": pa.array([f'{{"k": {e % 10}}}' for e in ids]),
+        })
+        path = src / f"events-{i:03d}.parquet"
+        pq.write_table(table, str(path))
+        os.utime(path, (1.7e9 + i, 1.7e9 + i))
+
+
+def test_stream_dedup_keeps_late_new_events(spark, tmp_path):
+    """T5 == batch for events that arrive long after the stream's
+    latest event time: a February file is drained first, then a
+    January file with 5 new ids and 2 re-delivered February rows, on
+    the same checkpoint. The sink holds what batch dropDuplicates over
+    both files holds; no event-time watermark drops the January ids."""
+    import datetime as dt
+
+    src, sink, ckpt = tmp_path / "late_src", str(tmp_path / "late_sink"), str(tmp_path / "late_ck")
+    feb = [(i, dt.datetime(2024, 2, 10, 12, i)) for i in range(10)]
+    jan = [(100 + i, dt.datetime(2024, 1, 5, 8, i)) for i in range(5)] + feb[3:5]
+    for frame in (feb, jan):
+        _write_event_files(src, [frame])
+        stream = jobs.read_events_stream(spark, str(src))
+        jobs.write_monthly_sink(jobs.stream_dedup(stream), sink, ckpt)
+    got = sorted(map(tuple, spark.read.parquet(sink).drop("month_key").collect()))
+    batch = jobs.stream_dedup(spark.read.schema(schemas.EVENTS).parquet(str(src)))
+    assert got == sorted(map(tuple, batch.collect()))
+    assert len(got) == 15
+    months = spark.read.parquet(sink).groupBy("month_key").count().collect()
+    assert {r.month_key: r["count"] for r in months} == {"2024-01": 5, "2024-02": 10}
+
+
+def test_stream_dedup_drain_runs_only_batches_with_data(spark, tmp_path):
+    """16 files, 8 per month, at the source's 8 files per trigger:
+    the drain commits exactly the two micro-batches that carry files,
+    with no trailing empty batch, and the sink holds each distinct
+    event once (some ids are delivered twice within their month)."""
+    import datetime as dt
+
+    src, sink, ckpt = tmp_path / "two_src", str(tmp_path / "two_sink"), str(tmp_path / "two_ck")
+    frames = []
+    for month in (3, 4):
+        for f in range(8):
+            ids = [month * 1000 + f * 10 + i for i in range(10)]
+            rows = [(e, dt.datetime(2024, month, 1 + f, 9, e % 60)) for e in ids]
+            frames.append(rows + rows[:1] + (frames[-1][:2] if f else []))
+    _write_event_files(src, frames)
+    stream = jobs.read_events_stream(spark, str(src))
+    jobs.write_monthly_sink(jobs.stream_dedup(stream), sink, ckpt)
+    commits = [n for n in os.listdir(os.path.join(ckpt, "commits")) if n.isdigit()]
+    assert sorted(commits) == ["0", "1"]
+    got = spark.read.parquet(sink).selectExpr("count(*)", "count(distinct event_id)").first()
+    assert tuple(got) == (160, 160)
 
 
 def test_stateful_running_totals(spark, source_dir, tmp_path):

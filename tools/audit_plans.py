@@ -238,7 +238,6 @@ ALLOW = {
     # input. The data-sized window these keys replaced is exactly
     # what grouped_rank exists to avoid.
     "win_cume": {"nested_loop", "single_partition_window"},
-    "win_rank": {"nested_loop", "single_partition_window"},
     "win_distribution": {"nested_loop", "single_partition_window"},
     "quota_per_source": {"nested_loop", "single_partition_window"},
     "llm_corpus_pipeline": {"nested_loop", "single_partition_window"},

@@ -2,7 +2,10 @@
 
 Times the given registry keys in one Spark session as bench.py does
 (``bench.time_invocation``: clearCache, then build and noop write inside
-the clock; N interleaved reps, median/min/first), and can
+the clock). Each key runs once first, reported as ``first`` and left out
+of the N interleaved reps behind ``median``/``min``/``all``: a key's
+first invocation in the session compiles its plan code and would
+otherwise pull a cold run into the steady-state median. It can
 dump `.explain("formatted")` for each key to a directory — the raw
 material for plans/r12/<key>_{before,after}.txt.
 
@@ -54,7 +57,7 @@ def main() -> int:
     if args.reps <= 0:
         return 0
     samples: dict[str, list[float]] = {k: [] for k in args.keys}
-    for _rep in range(args.reps):
+    for _rep in range(args.reps + 1):
         for key in args.keys:
             spark.sparkContext.setJobDescription(f"solo:{key}")
             samples[key].append(
@@ -62,11 +65,11 @@ def main() -> int:
             )
             spark.sparkContext.setJobDescription(None)
     out = {}
-    for key, vals in samples.items():
+    for key, (first, *vals) in samples.items():
         out[key] = {
+            "first": round(first, 3),
             "median": round(statistics.median(vals), 3),
             "min": round(min(vals), 3),
-            "first": round(vals[0], 3),
             "all": [round(v, 3) for v in vals],
         }
     print(json.dumps({"sf": args.sf, "loadavg": list(os.getloadavg()), "keys": out}, indent=1))
