@@ -56,15 +56,16 @@ def filter_valid(lineitem: DataFrame) -> DataFrame:
     )
 
 
-def first_per_key(df: DataFrame, keys: list[str], order_col: str, tiebreak: str) -> DataFrame:
-    """P3/W5 core: keep exactly one row per natural key (the earliest
-    by ``order_col``, ties broken by ``tiebreak``) — the reference's
-    operating-carrier-wins codeshare dedup and Mongo upsert semantics.
-    Window-rank based so it is deterministic (dropDuplicates is not).
+def first_per_key(df: DataFrame, keys: list[str], order: list) -> DataFrame:
+    """P3/W5 core: keep exactly one row per natural key, the first
+    under ``order`` (a list of sort columns, directions included) —
+    the reference's operating-carrier-wins codeshare dedup, and with
+    descending columns the latest-wins upsert. Window-rank based so it
+    is deterministic (dropDuplicates is not).
     """
     from pyspark.sql.window import Window
 
-    w = Window.partitionBy(*keys).orderBy(F.col(order_col).asc(), F.col(tiebreak).asc())
+    w = Window.partitionBy(*keys).orderBy(*order)
     return (
         df.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)

@@ -735,54 +735,6 @@ def _guard_group_count(offsets: DataFrame, max_groups: int, op: str) -> DataFram
     return offsets.withColumn("_gok", ok).filter("_gok").drop("_gok")
 
 
-def local_topk_per_group(
-    df: DataFrame,
-    group_cols: list,
-    order_cols: list,
-    k: int,
-) -> DataFrame:
-    """Narrow per-input-partition top-k pre-filter (r12, guide §2.3
-    "shuffle fewer bytes"): keeps every row whose rank within its
-    (input partition, group) is ≤ k under ``order_cols``. The output
-    is a provable superset of the global per-group top-k — a row
-    globally ranked ≤ k has at most k−1 rows ordered before it
-    anywhere, in particular inside its own partition — so a per-group
-    ranking family computed on the survivors agrees exactly with one
-    computed on the full frame for every row whose global row_number
-    is ≤ k (rank/dense_rank of a survivor depend only on rows ordered
-    strictly before it, all of which survive by the same argument).
-
-    Cost: NO data-sized shuffle. One narrow sort-within-partitions
-    pass (mono-id low bits give the within-partition position — the
-    global_rank trick), one tiny (num_partitions × |groups|) min-
-    position aggregate riding a broadcast join back, then the filter.
-    Output size is bounded by k · num_partitions · |groups|, which
-    turns the downstream per-group window from data-sized into
-    bounded — the scale answer for top-k-per-group queries that
-    neither serializes per group (plain window) nor range-shuffles
-    the full table (grouped_rank).
-
-    Layout pinning: the sorted frame feeds both the min-position leg
-    and the filter leg; a lazy local checkpoint freezes one partition
-    layout for both (see ``_pin_ranged``).
-    """
-    gnames = [df.select(c).columns[0] for c in group_cols]
-    s = (
-        df.sortWithinPartitions(*group_cols, *order_cols)
-        .withColumn("_pid", F.spark_partition_id())
-        .withColumn(
-            "_loc", F.monotonically_increasing_id().bitwiseAND((1 << 33) - 1)
-        )
-        .localCheckpoint(eager=False)
-    )
-    mins = s.groupBy("_pid", *gnames).agg(F.min("_loc").alias("_gmin"))
-    return (
-        _nullsafe_equi_join(s, F.broadcast(mins), ["_pid"] + gnames)
-        .filter(F.col("_loc") - F.col("_gmin") < F.lit(k))
-        .drop("_pid", "_loc", "_gmin")
-    )
-
-
 def grouped_rank(
     df: DataFrame,
     group_cols: list,
@@ -811,7 +763,9 @@ def grouped_rank(
     table is collected into a broadcast); ``max_groups`` enforces it —
     the call fails fast past the ceiling instead of OOMing the
     driver. For high-cardinality groups a plain per-group window is
-    already parallel — use that.
+    already parallel — use that. So is a top-k with a literal k: a
+    row_number window filtered to ≤ k gets a partial
+    ``WindowGroupLimit`` before its exchange (win_rank).
     ``group_cols + order_cols`` must be a total order (unique key).
 
     r12 internals rework (guide §2.4): one range shuffle on

@@ -16,9 +16,8 @@ single-reducer pattern to avoid at 100 TB.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 
 def dec_wsum(col: str | Column, window, scale: int = 6) -> Column:
@@ -31,17 +30,3 @@ def dec_wsum(col: str | Column, window, scale: int = 6) -> Column:
     return (
         F.sum(F.floor(c * F.lit(unit)).cast("long")).over(window) / F.lit(unit)
     ).cast("double")
-
-
-def keep_latest(df: DataFrame, keys: list[str], order_col: str, tiebreak: str) -> DataFrame:
-    """W5: dedup-by-rank keeping the *latest* row per natural key —
-    batch upsert semantics (last write wins), the complement of
-    relational.first_per_key."""
-    w = Window.partitionBy(*keys).orderBy(
-        F.col(order_col).desc(), F.col(tiebreak).desc()
-    )
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )

@@ -405,13 +405,15 @@ def llm_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     window, then grouped_rank's range shuffle). Now the decision
     chain runs on the narrow proxy frame: dedup is a `min_by` hash
     aggregation on md5(text) (map-side partial — no window sort),
-    the per-source quota rank (``grouped_rank``: range-partitioned +
-    broadcast offsets, never a per-source window) range-shuffles
-    60-byte rows, and the bounded survivor set (≤ 150/source) is
-    re-attached by a BROADCAST join — only survivors pay
-    tokenization, and no exchange ever carries text."""
+    the per-source quota is a row_number window filtered to ≤ 150,
+    which a partial ``WindowGroupLimit`` cuts to 150 rows per (map
+    partition, source) before the per-source exchange, and the
+    bounded survivor set (≤ 150/source) is re-attached by a
+    BROADCAST join — only survivors pay tokenization, and no
+    exchange ever carries text."""
+    from pyspark.sql.window import Window
+
     from flirt_consume_spark.operators import text as X
-    from flirt_consume_spark.operators.scale import grouped_rank
 
     docs = t(spark, sf_dir, "documents")
     q6 = F.floor(X.quality_score("text") * 1e6) / F.lit(1e6)
@@ -427,13 +429,11 @@ def llm_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.min_by(F.struct("doc_id", "source"), "doc_id").alias("_s"))
         .select(F.col("_s.doc_id").alias("doc_id"), F.col("_s.source").alias("source"))
     )
+    w = Window.partitionBy("source").orderBy(
+        F.md5(F.col("doc_id").cast("string")), F.col("doc_id")
+    )
     qt = (
-        grouped_rank(
-            d.withColumn("_pri", F.md5(F.col("doc_id").cast("string"))),
-            ["source"],
-            [F.col("_pri"), F.col("doc_id")],
-            rank_col="_rn",
-        )
+        d.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") <= 150)
         .select("doc_id")
     )

@@ -195,7 +195,7 @@ def sql_davg(expr: str, alias: str, scale: int = 6) -> str:
 # things holds:
 # - correctness needs it: a layout pin whose spark_partition_id /
 #   monotonically_increasing_id values are joined back by more than
-#   one plan leg (scale._pin_ranged, scale.local_topk_per_group), or
+#   one plan leg (scale._pin_ranged), or
 #   an eager checkpoint that is the action filling an Observation a
 #   driver loop reads to stop;
 # - a cleared-cache A/B at sf0.1 showed that removing it slows its

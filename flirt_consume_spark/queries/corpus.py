@@ -338,25 +338,17 @@ def quota_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source quota sampling: cap each language (standing in for
     crawl domain / source) at 100 documents, chosen by md5(doc_id)
     priority — a deterministic uniform draw that is stable under
-    re-runs and insertions, unlike rand(). Ranks come from ONE
-    range-partitioned ``grouped_rank`` (broadcast per-source
-    offsets) rather than a per-source window: with ~10 sources a
-    Window.partitionBy(source) serializes the whole corpus into ~10
-    reducers at 100 TB, exactly when the quota op runs."""
-    from flirt_consume_spark.operators.scale import grouped_rank
-
-    docs = t(spark, sf_dir, "documents")
+    re-runs and insertions, unlike rand(). The row_number window
+    filtered to ≤ 100 is planned with a partial ``WindowGroupLimit``
+    on the map side of the per-source exchange, so with ~10 sources
+    each reducer receives at most 100 · num_partitions rows, never
+    the corpus."""
+    w = Window.partitionBy("lang").orderBy(
+        F.md5(F.col("doc_id").cast("string")), F.col("doc_id")
+    )
     return (
-        grouped_rank(
-            docs.select(
-                "doc_id",
-                "lang",
-                F.md5(F.col("doc_id").cast("string")).alias("_pri"),
-            ),
-            ["lang"],
-            [F.col("_pri"), F.col("doc_id")],
-            rank_col="_rn",
-        )
+        t(spark, sf_dir, "documents")
+        .select("doc_id", "lang", F.row_number().over(w).alias("_rn"))
         .filter(F.col("_rn") <= 100)
         .select("doc_id", "lang", F.col("_rn").cast("bigint").alias("rn"))
     )

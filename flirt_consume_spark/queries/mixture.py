@@ -333,6 +333,8 @@ def sample_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # grouped_rank, not Window.partitionBy(lang): ~10 languages would
     # serialize the whole corpus into ~10 reducers at scale.
+    # The cap is computed from the data, not a literal k, so Spark
+    # cannot plan it as a WindowGroupLimit before the exchange.
     ranked = grouped_rank(
         docs.select(
             "doc_id",

@@ -88,7 +88,7 @@ def filter_codeshare(spark: SparkSession, sf_dir: str) -> DataFrame:
     (first event per (user_id, event_type)); deterministic rank-dedup,
     the reference's marketing-duplicate drop."""
     ev = R.first_per_key(
-        t(spark, sf_dir, "events"), ["user_id", "event_type"], "ts", "event_id"
+        t(spark, sf_dir, "events"), ["user_id", "event_type"], ["ts", "event_id"]
     )
     return ev.select(
         "event_id",

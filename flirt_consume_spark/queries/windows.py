@@ -6,7 +6,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from flirt_consume_spark.operators.windows import dec_wsum, keep_latest
+from flirt_consume_spark.operators.relational import first_per_key
+from flirt_consume_spark.operators.windows import dec_wsum
 from flirt_consume_spark.queries.base import dsum, query, t
 
 
@@ -126,50 +127,40 @@ def win_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     order by a full unique key; rank/dense_rank are tie-stable on the
     semantic key alone.
 
-    Scale path (r12 rework, guide §2.3): the output keeps only rows
-    with row_number ≤ 10 per segment, so the full ranking family
-    never needs to run over the full table. ``local_topk_per_group``
-    pre-filters to each input partition's per-segment top 10 — a
-    narrow pass, no data-sized shuffle, provably a superset of the
-    global top 10 whose survivor ranks equal the full-table ranks
-    (rank/dense_rank of a survivor depend only on rows ordered
-    strictly before it, all of which survive). The exact
-    rn/rank/dense_rank family then runs as native windows over the
-    BOUNDED survivor set (≤ 10 · num_partitions · 5 rows — the per-
-    segment reducers sort thousands of rows at any table size, not
-    the table). ntile(4) is over the FULL segment, so it cannot be
-    windowed on survivors: it comes from the exact
+    Scale path: the output keeps only rows with row_number ≤ 10 per
+    segment, so the full ranking family never runs over the full
+    table. The row_number window filtered to ≤ 10 is planned with a
+    partial ``WindowGroupLimit`` on the map side of the segment
+    exchange, so each per-segment reducer receives at most
+    10 · num_partitions rows at any table size. rank/dense_rank then
+    run over those survivors, and equal the full-table ranks: a
+    survivor's rank depends only on rows ordered strictly before it,
+    all of which survive. ntile(4) is over the FULL segment, so it
+    cannot be windowed on survivors: it comes from the exact
     first-(n%k)-tiles-get-ceil(n/k) row-number formula with the tiny
-    per-segment count table on a broadcast (the win_ntile
-    construction, ``ntile_expr``). The pre-rework plan (range-
-    partitioned global rank + three keyed join-backs) measured 24
-    exchanges / 1.87 s at sf0.1; this shape is 5 tiny exchanges with
-    zero full-table shuffles."""
-    from flirt_consume_spark.operators.scale import (
-        _nullsafe_equi_join,
-        local_topk_per_group,
-        ntile_expr,
-    )
+    per-segment count table on a broadcast (``ntile_expr``)."""
+    from flirt_consume_spark.operators.scale import _nullsafe_equi_join, ntile_expr
 
     cust = t(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment", "c_acctbal"
     )
-    order = [F.col("c_acctbal").desc(), F.col("c_custkey")]
-    cand = local_topk_per_group(cust, ["c_mktsegment"], order, 10)
-    w_full = Window.partitionBy("c_mktsegment").orderBy(*order)
+    w_full = Window.partitionBy("c_mktsegment").orderBy(
+        F.col("c_acctbal").desc(), F.col("c_custkey")
+    )
     w_tie = Window.partitionBy("c_mktsegment").orderBy(
         F.col("c_acctbal").desc()
     )
     fam = (
-        cand.select(
+        cust.withColumn("rn", F.row_number().over(w_full))
+        .filter(F.col("rn") <= 10)
+        .select(
             "c_custkey",
             "c_mktsegment",
             "c_acctbal",
-            F.row_number().over(w_full).alias("rn"),
+            "rn",
             F.rank().over(w_tie).alias("rnk"),
             F.dense_rank().over(w_tie).alias("drnk"),
         )
-        .filter(F.col("rn") <= 10)
     )
     cnts = cust.groupBy("c_mktsegment").agg(
         F.count(F.lit(1)).cast("bigint").alias("_n")
@@ -267,7 +258,11 @@ def dedup_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference's Mongo upsert (one document per natural key, newest
     version kept)."""
     orders = t(spark, sf_dir, "orders")
-    latest = keep_latest(orders, ["o_custkey"], "o_orderdate", "o_orderkey")
+    latest = first_per_key(
+        orders,
+        ["o_custkey"],
+        [F.col("o_orderdate").desc(), F.col("o_orderkey").desc()],
+    )
     return latest.select(
         "o_custkey", "o_orderkey", F.to_date("o_orderdate").alias("order_date")
     )

@@ -32,6 +32,7 @@ from pyspark.sql.types import (
 
 from flirt_consume_spark import schemas
 from flirt_consume_spark.io import with_month_key, write_partitioned
+from flirt_consume_spark.operators.relational import first_per_key
 from flirt_consume_spark.session import apply_runtime_confs
 
 
@@ -399,27 +400,21 @@ def apply_cdc_stream(
     recover_state()
     log = spark.readStream.schema(CDC_LOG_SCHEMA).parquet(source_dir)
 
-    def latest_wins(df: DataFrame) -> DataFrame:
-        from pyspark.sql.window import Window
-
-        w = Window.partitionBy("key").orderBy(
-            F.col("version").desc(),
-            F.col("price_cents").desc(),
-            F.col("op").desc(),
-        )
-        return (
-            df.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
+    latest_first = [
+        F.col("version").desc(),
+        F.col("price_cents").desc(),
+        F.col("op").desc(),
+    ]
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
         tmp, old = state_path + ".new", state_path + ".old"
         recover_state()
-        compacted = latest_wins(batch_df)
+        compacted = first_per_key(batch_df, ["key"], latest_first)
         if os.path.exists(os.path.join(state_path, "_SUCCESS")):
             state = batch_df.sparkSession.read.parquet(state_path)
-            compacted = latest_wins(state.unionByName(compacted))
+            compacted = first_per_key(
+                state.unionByName(compacted), ["key"], latest_first
+            )
         # The write below both reads the old snapshot and materializes
         # the new one; only after it completes do the two renames swap
         # them, so the standing snapshot is never deleted before its

@@ -31,7 +31,7 @@ KEYS = [
     "agg_route",  # hash agg
     "agg_percentile",  # grouped_percentiles rank path
     "agg_weighted_median",  # bucketized weighted quantile
-    "win_rank",  # local top-k pre-filter + ntile_expr
+    "win_rank",  # WindowGroupLimit top-k + ntile_expr
     "audit_ks",  # multi-counter global_cumsum
     "join_asof",  # union + running scan
     "join_setsim",  # LSH banding + verify

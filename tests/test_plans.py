@@ -7,7 +7,9 @@ from __future__ import annotations
 
 import contextlib
 import io
+import re
 
+import pytest
 from pyspark.sql import functions as F
 
 from flirt_consume_spark.io import load_table
@@ -16,10 +18,10 @@ from flirt_consume_spark.queries import REGISTRY
 SF = "/root/testdata/sf0.001"
 
 
-def plan_of(df) -> str:
+def plan_of(df, mode: str = "formatted") -> str:
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
+        df.explain(mode)
     return buf.getvalue()
 
 
@@ -103,24 +105,28 @@ def test_contamination_probe_broadcasts_benchmark(spark):
     assert "BroadcastHashJoin" in p, p
 
 
-def test_quota_window_partitions_by_source(spark):
-    # The quota rank must stay parallel in the source key, never
-    # serialize the corpus through one partition. Post-r12
-    # grouped_rank the rank itself comes from a range shuffle on
-    # (lang, _pri, doc_id) hidden behind a lazy localCheckpoint, so
-    # the visible plan evidence is the per-(scan-partition, lang)
-    # offset aggregation — hash-partitioned on (_pid, lang) — and the
-    # absence of any per-lang window over the corpus.
-    p = plan_of(REGISTRY["quota_per_source"].fn(spark, SF))
-    assert "hashpartitioning(_pid" in p and "lang" in p, p
-    # The only Window node allowed is the bounded-cardinality guard
-    # over the tiny offsets frame (single partition BY DESIGN there);
-    # no data-sized window may partition the corpus.
-    assert "Window.partitionBy(lang)" not in p
-    # And the rank family's range shuffle internals are pinned where
-    # they are visible: the grouped_rank property suite
-    # (tests/test_properties.py) checks rank values against native
-    # windows on every shape.
+@pytest.mark.parametrize(
+    "key,group,k",
+    [
+        ("win_rank", "c_mktsegment", 10),
+        ("quota_per_source", "lang", 100),
+        ("llm_corpus_pipeline", "source", 150),
+    ],
+)
+def test_topk_per_group_limits_before_exchange(spark, key, group, k):
+    # A per-group top-k must never hand one reducer a whole group of a
+    # data-sized table. A row_number window filtered to <= k is planned
+    # with a partial WindowGroupLimit directly below the group's
+    # exchange, so each reducer receives at most k rows per map
+    # partition and group.
+    p = plan_of(REGISTRY[key].fn(spark, SF), "simple")
+    assert re.search(
+        rf"Exchange hashpartitioning\({group}#\d+, \d+\).*\n[ :]*\+- "
+        rf"WindowGroupLimit \[{group}#\d+\], .*row_number\(\), {k}, Partial$",
+        p,
+        re.M,
+    ), p
+    assert "_pid" not in p, p
 
 
 def test_partitioned_sink_scan_prunes_partitions(spark, tmp_path):

@@ -239,8 +239,6 @@ ALLOW = {
     # what grouped_rank exists to avoid.
     "win_cume": {"nested_loop", "single_partition_window"},
     "win_distribution": {"nested_loop", "single_partition_window"},
-    "quota_per_source": {"nested_loop", "single_partition_window"},
-    "llm_corpus_pipeline": {"nested_loop", "single_partition_window"},
     "pack_sequences": {"nested_loop", "single_partition_window"},
     "time_downsample": {"nested_loop", "single_partition_window"},
     # grouped_percentiles (round-7 rewrite of the exact-percentile
