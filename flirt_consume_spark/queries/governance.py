@@ -753,13 +753,13 @@ def agg_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
     y − θ(x − x̄) with θ = cov(x,y)/var(x) removes the predictable
     variance so arm deltas need far less traffic to resolve.
 
-    Everything reduces to ONE per-user aggregation pass + two tiny
-    aggregates over the 150-row user table: θ and the per-arm
-    adjusted means are pure algebra over exact integer moments
-    (Σx, Σy, Σxy, Σx² in cents), so no second pass over raw events
-    and no per-row adjustment materialization — and the doubles
-    derived from those integers are bit-identical on both engines.
-    Arms are the deterministic user_id parity."""
+    Everything reduces to ONE per-user aggregation pass + one per-arm
+    aggregate of exact integer moments (Σx, Σy, Σxy, Σx² in cents) on
+    one partition, whose pooled moments are windows over the arm rows:
+    θ and the per-arm adjusted means are pure algebra over them, so no
+    second pass and no per-row adjustment materialization — and the
+    doubles derived from those integers are bit-identical on both
+    engines. Arms are the deterministic user_id parity."""
     ev = t(spark, sf_dir, "events")
     cents = F.floor(F.col("value") * 100).cast("long")
     per_user = ev.groupBy("user_id").agg(
@@ -770,19 +770,17 @@ def agg_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("y"),
     ).withColumn("arm", F.col("user_id") % 2)
-    pooled = per_user.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("x").alias("sx"),
-        F.sum("y").alias("sy"),
-        F.sum(F.col("x") * F.col("y")).alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).alias("sxx"),
-    )
     arms = per_user.groupBy("arm").agg(
         F.count(F.lit(1)).alias("an"),
         F.sum("x").alias("ax"),
         F.sum("y").alias("ay"),
+        F.sum(F.col("x") * F.col("y")).alias("axy"),
+        F.sum(F.col("x") * F.col("x")).alias("axx"),
+    ).coalesce(1)
+    pooled = ("n", "an"), ("sx", "ax"), ("sy", "ay"), ("sxy", "axy"), ("sxx", "axx")
+    j = arms.withColumns(
+        {p: F.sum(a).over(Window.partitionBy()) for p, a in pooled}
     )
-    j = arms.crossJoin(F.broadcast(pooled))
     # try_divide: with a degenerate pre-period (all x identical —
     # e.g. one user, or every pre-period value NULLed upstream) the
     # variance denominator is 0 and θ is undefined — NULL, matching
@@ -888,7 +886,7 @@ def audit_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
     log10: decimal float formatting differs across engines, integer
     formatting does not). Expected shares are precomputed literals;
     observed shares are rational. One narrow projection + one tiny
-    agg + a 1-row total broadcast."""
+    agg on one partition, whose total is a window over the 9 digits."""
     orders = t(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 0)
     d = orders.select(
         F.substring(
@@ -899,18 +897,18 @@ def audit_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("digit")
     )
-    tot = d.agg(F.count(F.lit(1)).alias("_t"))
+    tot = F.sum("n").over(Window.partitionBy())
     expected = F.when(F.col("digit") == 1, F.lit(_BENFORD[1]))
     for k in range(2, 10):
         expected = expected.when(F.col("digit") == k, F.lit(_BENFORD[k]))
     return (
         d.groupBy("digit")
         .agg(F.count(F.lit(1)).alias("n"))
-        .crossJoin(F.broadcast(tot))
+        .coalesce(1)
         .select(
             "digit",
             "n",
-            (F.floor(F.col("n").cast("double") / F.col("_t") * 1e6) / 1e6)
+            (F.floor(F.col("n").cast("double") / tot * 1e6) / 1e6)
             .alias("share"),
             expected.alias("expected"),
         )
@@ -1413,35 +1411,30 @@ def time_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUSUM changepoint localization (Page 1954, the classic
     mean-shift detector): cumulative sum of daily deviations from the
     series mean; the |CUSUM| peak estimates where the level shifted.
-    The running sum is ``global_cumsum`` over integer milli-cent
-    deviations (range partition + per-partition window — no
-    single-reducer stage however long the series), the mean and the
-    peak are 1-row broadcasts, and the peak flag compares exact
-    integers so the argmax is deterministic (equal-|CUSUM| ties all
-    flag, identically on both engines)."""
-    from flirt_consume_spark.operators.scale import global_cumsum
-
+    The calendar-bounded daily series is coalesced to one partition,
+    and the mean, the running sum of integer milli-cent deviations and
+    the peak are windows over it (no exchange after the daily agg).
+    The peak flag compares exact integers so the argmax is
+    deterministic (equal-|CUSUM| ties all flag, identically on both
+    engines)."""
     ev = t(spark, sf_dir, "events")
     daily = ev.groupBy(F.col("ts").cast("date").alias("d")).agg(
         F.sum(F.floor(F.col("value") * 100).cast("long"))
         .cast("long")
         .alias("cents")
+    ).coalesce(1)
+    whole = Window.partitionBy()
+    mu = F.sum("cents").over(whole).cast("double") / F.count(F.lit(1)).over(whole)
+    dv = F.floor((F.col("cents") - mu) * 1e3).cast("long")
+    running = Window.orderBy("d").rowsBetween(Window.unboundedPreceding, 0)
+    cusum = daily.select("d", dv.alias("dv")).withColumn(
+        "cs", F.sum("dv").over(running)
     )
-    mean = daily.agg(
-        (F.sum("cents").cast("double") / F.count(F.lit(1))).alias("mu")
-    )
-    dev = daily.crossJoin(F.broadcast(mean)).select(
-        "d",
-        F.floor((F.col("cents") - F.col("mu")) * 1e3)
-        .cast("long")
-        .alias("dv"),
-    )
-    cusum = global_cumsum(dev, "dv", [F.col("d")], cum_col="cs")
-    peak = cusum.agg(F.max(F.abs(F.col("cs"))).alias("_pk"))
-    return cusum.crossJoin(F.broadcast(peak)).select(
+    peak = F.max(F.abs(F.col("cs"))).over(whole)
+    return cusum.select(
         F.date_format("d", "yyyy-MM-dd").alias("day"),
         (F.col("cs").cast("double") / 1e3 / 100).alias("cusum"),
-        (F.abs(F.col("cs")) == F.col("_pk")).alias("is_changepoint"),
+        (F.abs(F.col("cs")) == peak).alias("is_changepoint"),
     )
 
 

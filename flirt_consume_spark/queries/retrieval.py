@@ -19,6 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from flirt_consume_spark.operators import dedup as D
 from flirt_consume_spark.operators import retrieval as R
@@ -551,11 +552,12 @@ def emb_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     every iterate is floored to the 1e-9 grid and normalized by the
     MAX-ABS component (a division — IEEE-exact) instead of the L2
     norm, whose sqrt-of-sum would accumulate order-dependent error;
-    the max itself rides a 1-row broadcast. Σ over 64 products per
-    row is the exact integer-unit sum."""
-    w, mx = _power_w(spark, sf_dir)
-    return w.crossJoin(F.broadcast(mx)).select(
-        "i", (F.floor(F.col("w") / F.col("_m") * 1e9) / 1e9).alias("v")
+    the max is a window over the 64-row iterate, coalesced to one
+    partition. Σ over 64 products per row is the exact integer-unit
+    sum."""
+    mx = F.max(F.abs(F.col("w"))).over(Window.partitionBy())
+    return _power_w(spark, sf_dir).select(
+        "i", (F.floor(F.col("w") / mx * 1e9) / 1e9).alias("v")
     )
 
 
@@ -564,18 +566,13 @@ emb_power_iteration.__doc__ = emb_power_iteration.__doc__.format(
 )
 
 
-def _power_w(spark: SparkSession, sf_dir: str):
-    """Un-normalized {_POWER_ITERS}-step power iterate (i, w) plus the
-    1-row max-abs normalizer — shared by emb_power_iteration (which
-    emits the 1e-9-floored direction) and emb_pca_project (which
-    needs the INTEGER 1e-9-grid coefficients so projection sums stay
-    exact). Built fresh PER INVOCATION (the r12 session memo was
-    cross-invocation result caching; removed in r13)."""
-    w, mx, _cov = _power_w_build(spark, sf_dir)
-    return w, mx
-
-
-def _power_w_build(spark: SparkSession, sf_dir: str):
+def _power_w(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Un-normalized {_POWER_ITERS}-step power iterate (i, w), one row
+    per dimension, coalesced to one partition — shared by
+    emb_power_iteration (which emits the 1e-9-floored direction) and
+    emb_pca_project (which needs the INTEGER 1e-9-grid coefficients so
+    projection sums stay exact). Both normalize by its max-abs
+    component, a window over that one partition."""
     cov = _cov_long(spark, sf_dir).localCheckpoint(eager=False)
     # Iterate WITHOUT intermediate normalization: |cov| <= ~1, so 3
     # un-normalized iterates stay well inside double range, and
@@ -602,8 +599,7 @@ def _power_w_build(spark: SparkSession, sf_dir: str):
                 ).alias("w")
             )
         )
-    mx = w.agg(F.max(F.abs(F.col("w"))).alias("_m"))
-    return w, mx, cov
+    return w.coalesce(1)
 
 
 @query(
@@ -674,10 +670,9 @@ def emb_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined to a 64-row broadcast + a per-vector hash agg — the plan
     you'd want at 100 TB (data scanned once for cov, once for
     projection; nothing else is data-sized)."""
-    w, mx = _power_w(spark, sf_dir)
-    vl = w.crossJoin(F.broadcast(mx)).select(
-        "i",
-        F.floor(F.col("w") / F.col("_m") * 1e9).cast("long").alias("vl"),
+    mx = F.max(F.abs(F.col("w"))).over(Window.partitionBy())
+    vl = _power_w(spark, sf_dir).select(
+        "i", F.floor(F.col("w") / mx * 1e9).cast("long").alias("vl")
     )
     emb = t(spark, sf_dir, "embeddings")
     xs = emb.select(

@@ -38,18 +38,20 @@ every selection-by-rank uses integer indices into a sorted array
 Scale notes: the three trend tests collapse the fact table to its
 bounded monthly series FIRST (one hash agg; the series length is
 calendar-bounded, so every pairwise structure after it is constant
-size — the time_crosscorr shape). Pair generation and scalar
-broadcasts are tiny nested-loop joins over those bounded tables,
-allowlisted in tools/audit_plans.py. Nothing after the first
-aggregation is data-sized.
+size — the time_crosscorr shape). Pair generation is a tiny
+nested-loop join over those bounded tables, allowlisted in
+tools/audit_plans.py, as are the 1-row count broadcasts of the
+Theil–Sen and Mann–Kendall keys. Pettitt coalesces its bounded rank
+table to one partition and takes its totals, running sum and peak as
+windows over it. Nothing after the first aggregation is data-sized.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
-from flirt_consume_spark.operators.scale import global_cumsum
 from flirt_consume_spark.queries.base import query, t
 
 # Shared bounded monthly-revenue series: m = months since 1995-01
@@ -69,9 +71,7 @@ _MONTHLY_SQL = """
 # mannkendall / pettitt) fan MULTIPLE plan legs out of it (count,
 # broadcast pair side, main stream). A lazy PER-INVOCATION pin keeps
 # each invocation to one orders scan + aggregation (guide §5) while
-# guaranteeing every bench/oracle run recomputes from parquet — the
-# r12 session cache here was flagged as cross-invocation result
-# memoisation and removed in r13.
+# every bench/oracle run still recomputes from parquet.
 def _monthly_rev(spark: SparkSession, sf_dir: str) -> DataFrame:
     od = t(spark, sf_dir, "orders")
     d = F.col("o_orderdate").cast("date")
@@ -325,11 +325,11 @@ def time_pettitt(spark: SparkSession, sf_dir: str) -> DataFrame:
     U_t = t(n+1) − Σ_{i≤t} R2_i — integers throughout.
 
     Scale: monthly collapse first; the R2 ranks come from the bounded
-    series' self-join, the running sum is ``global_cumsum`` (range
-    partition + offsets — no single-reducer window even if the series
-    were long), and the peak/argmax are integer comparisons."""
+    series' self-join, coalesced to one partition, and the position,
+    running sum, series length and peak are windows over that one
+    partition (the oracle's own shape) — no exchange after the ranks.
+    The peak/argmax are integer comparisons."""
     monthly = _monthly_rev(spark, sf_dir)
-    n = monthly.agg(F.count(F.lit(1)).cast("bigint").alias("n"))
     b = monthly.select(F.col("m").alias("mb"), F.col("rev").alias("rb"))
     r = (
         monthly.crossJoin(F.broadcast(b))
@@ -346,33 +346,28 @@ def time_pettitt(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("r2")
         )
-        .withColumn("one", F.lit(1).cast("long"))
+        .coalesce(1)
     )
-    cum = global_cumsum(
-        r, ["r2", "one"], [F.col("m")], cum_col=["cum_r2", "tpos"]
-    )
-    stat = (
-        cum.crossJoin(F.broadcast(n))
-        .filter(F.col("tpos") < F.col("n"))
-        .select(
-            "m",
-            F.col("tpos").cast("bigint").alias("tpos"),
-            (
-                F.col("tpos") * (F.col("n") + 1) - F.col("cum_r2")
-            ).cast("bigint").alias("ut"),
-        )
-    )
-    peak = stat.agg(F.max(F.abs(F.col("ut"))).alias("pk"))
-    hits = stat.crossJoin(F.broadcast(peak)).filter(
-        F.abs(F.col("ut")) == F.col("pk")
-    )
+    whole, by_m = Window.partitionBy(), Window.orderBy("m")
+    stat = r.withColumns(
+        {
+            "tpos": F.row_number().over(by_m).cast("bigint"),
+            "cum_r2": F.sum("r2").over(
+                by_m.rowsBetween(Window.unboundedPreceding, 0)
+            ),
+            "n": F.count(F.lit(1)).over(whole),
+        }
+    ).filter(F.col("tpos") < F.col("n"))
+    ut = (F.col("tpos") * (F.col("n") + 1) - F.col("cum_r2")).cast("bigint")
     return (
-        hits.groupBy("pk")
+        stat.withColumn("ut", ut)
+        .withColumn("pk", F.max(F.abs(F.col("ut"))).over(whole))
+        .filter(F.abs(F.col("ut")) == F.col("pk"))
+        .groupBy("n", "pk")
         .agg(
             F.min("tpos").cast("bigint").alias("t_star"),
             F.min("m").cast("int").alias("m_star"),
         )
-        .crossJoin(F.broadcast(n))
         .select(
             F.col("n").alias("n_months"),
             "t_star",

@@ -129,6 +129,41 @@ def test_topk_per_group_limits_before_exchange(spark, key, group, k):
     assert "_pid" not in p, p
 
 
+@pytest.mark.parametrize(
+    "key,max_jobs",
+    [
+        ("audit_chisq", 2),
+        ("audit_benford", 2),
+        ("agg_cuped", 3),
+        ("time_pettitt", 4),
+        ("time_cusum", 2),
+        ("emb_power_iteration", 11),
+        ("emb_pca_project", 13),
+    ],
+)
+def test_bounded_frame_totals_are_windows(spark, jobs_started, key, max_jobs):
+    # Totals, running sums and peaks over a frame of fixed size (cells,
+    # digits, arms, months, days, dimensions) are windows over that
+    # frame coalesced to one partition: no 1-row broadcast crossed back
+    # in, no range-partitioned prefix sum, and no job for either. Only
+    # time_pettitt's pair join over its monthly series stays a nested
+    # loop. max_jobs counts the build and a noop action together.
+    plans = []
+
+    def run():
+        df = REGISTRY[key].fn(spark, SF)
+        df.write.format("noop").mode("overwrite").save()
+        plans.append(plan_of(df))
+
+    spark.catalog.clearCache()
+    n_jobs = jobs_started(run)
+    p = plans[0]
+    nested = len(re.findall(r"^\(\d+\) BroadcastNestedLoopJoin", p, re.M))
+    assert nested == (key == "time_pettitt"), p
+    assert "rangepartitioning" not in p and "_pid" not in p, p
+    assert n_jobs <= max_jobs, n_jobs
+
+
 def test_partitioned_sink_scan_prunes_partitions(spark, tmp_path):
     """Reading one month back from a month-partitioned sink must prune
     at the scan (PartitionFilters on month_key), not read-then-filter

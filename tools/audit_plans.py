@@ -7,7 +7,9 @@ whole-stage-codegen spans, parquet pushdown, and red flags
 partition-less window sorts).
 
 Usage: python tools/audit_plans.py [--sf DIR] [keys...]
-Exit 1 if any red flag fires outside the declared allowlist.
+Exit 1 if any red flag fires outside the declared allowlist, or if an
+allowlisted flag no longer fires on its key (a stale allowance would
+let that flag come back unreviewed).
 
 Plan-regression detection (round 9): the per-key structural metrics
 (exchange / broadcast-hash-join / sort-merge-join counts, pushdown)
@@ -51,6 +53,7 @@ ALLOW = {
     # Same for W6, which adds a 1-row broadcast total for the ntile
     # formula. Neither plan serializes any data-sized stage.
     "sort_global": {"nested_loop"},
+    "win_ntile": {"nested_loop"},
     # knn probes broadcast ~10 query vectors against the corpus — the
     # nested-loop is over a 10-row broadcast side, by design.
     "llm_knn": {"nested_loop"},
@@ -60,23 +63,12 @@ ALLOW = {
     # planted-recall sibling: same knn_exact 10-row query broadcast;
     # the whole planted table is 120 synthetic rows by construction.
     "emb_recall_planted": {"nested_loop"},
-    # the rank-over-50-rows windows after a TakeOrdered cut.
-    "llm_vocab": {"single_partition_window"},
-    "topk": {"single_partition_window"},
     # Theta self-join over the 25-row nation dim: the nested loop's
     # broadcast side is the whole (tiny) table.
     "geo_haversine": {"nested_loop"},
-    # Deliberate tiny-broadcast cross products: every vector meets a
-    # constant-size side (10 centroids / the hyperplane set / 16 bit
-    # positions) — the scan side never shuffles.
+    # Deliberate tiny-broadcast cross product: every vector meets the
+    # 10 centroids — the scan side never shuffles.
     "llm_ann_ivf": {"nested_loop"},
-    "llm_ann_lsh": {"nested_loop"},
-    "llm_embed_dedup": {"nested_loop"},
-    # Same constant-size hyperplane build (8×64 crossJoin) feeding the
-    # shared LSH bucket index that generates the banded candidates.
-    "join_similarity": {"nested_loop"},
-    "llm_simhash": {"nested_loop"},
-    "win_ntile": {"nested_loop"},
     # Normalizing total as SUM(...) OVER () — a window over ≤5
     # segment rows (the one-pass shape destination_distribution plans).
     "sql_distribution": {"single_partition_window"},
@@ -98,7 +90,7 @@ ALLOW = {
     # BOTH a user_id-hashpartitioned Window (verified in the formatted
     # plan) AND a legitimately-SinglePartition 1-row final aggregate;
     # the flag cannot associate the two nodes.
-    "funnel_steps": {"nested_loop", "single_partition_window"},
+    "funnel_steps": {"single_partition_window"},
     "win_pattern": {"single_partition_window"},
     # 1-row min/max bounds broadcast for bucket assignment.
     "agg_histogram": {"nested_loop"},
@@ -128,9 +120,6 @@ ALLOW = {
     # SinglePartition agg AND a window hash-partitioned by _pid
     # (verified in the formatted plan: windowspecdefinition(_pid, ...)).
     "agg_abc": {"nested_loop", "single_partition_window"},
-    # Four (1-row n_rows) × (1-row n_orphans) cross products — the
-    # report assembly, constant size.
-    "audit_fk": {"nested_loop"},
     # 1-row (N, total_dl) corpus-stats broadcast for the idf/avgdl
     # arithmetic — the same lazy-scalar shape as llm_tfidf.
     "bm25_rank": {"nested_loop"},
@@ -140,30 +129,13 @@ ALLOW = {
     # 1-row bigram-total broadcast for the lift denominator — the
     # lazy-scalar shape (llm_tfidf/bm25_rank).
     "llm_collocations": {"nested_loop"},
-    # global_rank's triangular (pid → offset) broadcast join —
-    # num_partitions rows, constant in data size (sort_global shape).
-    # single_partition_window (r12): the grouped_rank
-    # _guard_group_count lazy guard — a count window over the tiny
-    # per-(pid, group) offsets frame, bounded by the broadcast
-    # contract (raise_error fires otherwise); same allowance as the
-    # other grouped_rank consumers below.
-    "agg_gini": {"nested_loop", "single_partition_window"},
-    # 1-row pooled-moments broadcast (n, Σx, Σy, Σxy, Σx²) joined to
-    # the per-arm rows — the lazy-scalar shape.
-    "agg_cuped": {"nested_loop"},
-    # 1-row total-count broadcast for the digit shares — lazy scalar.
-    "audit_benford": {"nested_loop"},
-    # 1-row max-abs broadcast for the final iterate normalization —
-    # lazy scalar over the constant-size (dim) vector.
-    "emb_power_iteration": {"nested_loop"},
+    # The grouped_rank _guard_group_count lazy guard — a count window
+    # over the tiny per-(pid, group) offsets frame, bounded by the
+    # broadcast contract (raise_error fires otherwise); same allowance
+    # as the other grouped_rank consumers below.
+    "agg_gini": {"single_partition_window"},
     # 1-row pooled-sigma broadcast for the 3σ flags — lazy scalar.
     "time_seasonal": {"nested_loop"},
-    # nested_loop: 1-row mean + 1-row peak broadcasts plus
-    # global_cumsum's triangular offsets join (all constant-size).
-    # single_partition_window is the llm_tfidf heuristic false
-    # positive: the plan holds the legitimately-SinglePartition 1-row
-    # scalar aggs AND a window hash-partitioned by _pid.
-    "time_cusum": {"nested_loop", "single_partition_window"},
     # nested_loop: the 1-row (n_f, n_o, n_p) totals broadcast crossed
     # into the ECDF rows + global_cumsum's triangular (pid → offset)
     # join — both constant-size sides (sort_global shape).
@@ -171,15 +143,9 @@ ALLOW = {
     # positive: the plan holds the legitimate 1-row SinglePartition
     # scalar aggs AND a window hash-partitioned by _pid.
     "audit_ks": {"nested_loop", "single_partition_window"},
-    # 1-row grand-total broadcast crossed into the O(cells)
-    # contingency frame — the lazy-scalar shape (audit_benford).
-    "audit_chisq": {"nested_loop"},
     # global_rank's triangular (pid → offset) broadcast join —
     # num_partitions rows, constant in data size (sort_global shape).
     "sample_systematic": {"nested_loop"},
-    # 1-row max-abs broadcast normalizing the 64-row direction —
-    # the same lazy-scalar shape emb_power_iteration declares.
-    "emb_pca_project": {"nested_loop"},
     # Same two findings as audit_ks, same justification: nested_loop
     # is global_cumsum's triangular (pid → offset) broadcast join
     # (constant-size side); single_partition_window is the heuristic
@@ -189,13 +155,6 @@ ALLOW = {
     # global_cumsum's triangular (pid → offset) broadcast join —
     # num_partitions rows, constant in data size (sort_global shape).
     "quota_budget_select": {"nested_loop"},
-    # nested_loop: global_cumsum's triangular offsets join + the
-    # 1-row total broadcast (audit_ks shape). single_partition_window
-    # is the llm_tfidf heuristic false positive (legitimate 1-row
-    # scalar aggs + a _pid-hashpartitioned window in the same plan);
-    # the curve-packing collect itself aggregates a BOUNDED table
-    # (one row per distinct whole-day duration).
-    "time_survival": {"nested_loop", "single_partition_window"},
     # Same audit_ks shape: nested_loop = global_cumsum's triangular
     # offsets join + the 1-row positives-total broadcast;
     # single_partition_window = the heuristic false positive
@@ -210,43 +169,32 @@ ALLOW = {
     "time_crosscorr": {"nested_loop"},
     # Trend tests (queries/trend.py): all pairwise structure runs on
     # the calendar-bounded monthly series (≤~100 rows after the first
-    # hash agg) — the i<j pair join and the 1-row n/ties broadcasts
-    # are constant-size nested loops by construction (time_crosscorr
+    # hash agg) — the pair joins and the 1-row n/ties broadcasts are
+    # constant-size nested loops by construction (time_crosscorr
     # shape).
     "time_theilsen": {"nested_loop"},
     "time_mannkendall": {"nested_loop"},
-    # Same bounded-series nested loops, plus global_cumsum's
-    # triangular (pid → offset) broadcast join; the window flag is
-    # the llm_tfidf heuristic false positive (verified: both Windows
-    # are windowspecdefinition(_pid, m) — no partition-less window).
-    "time_pettitt": {"nested_loop", "single_partition_window"},
+    "time_pettitt": {"nested_loop"},
     # 1-row order-count broadcast into the ≤C(25,2)-row brand-pair
     # frame (lazy-scalar shape).
     "agg_basket_pairs": {"nested_loop"},
-# (agg_weighted_median left the allowlist in round 7: the two-level
-# bucketized_weighted_quantile rewrite has no triangular joins, no
-# scary nodes — it audits clean.)
     # grouped_rank/grouped_cumsum call sites (operators/scale.py):
-    # the triangular (pid → offset) broadcast join inside
-    # global_rank/global_cumsum — num_partitions rows, constant in
-    # data size (sort_global shape). The per-group offset join itself
-    # is a plain broadcast hash join over the bounded group table.
-    # single_partition_window (added r7) is the bounded-cardinality
-    # GUARD inside _guard_group_count: a count window over the
-    # per-group offsets frame — ≤ max_groups rows when the contract
-    # holds (raise_error fires otherwise), never over data-sized
-    # input. The data-sized window these keys replaced is exactly
-    # what grouped_rank exists to avoid.
-    "win_cume": {"nested_loop", "single_partition_window"},
-    "win_distribution": {"nested_loop", "single_partition_window"},
+    # single_partition_window is the bounded-cardinality GUARD inside
+    # _guard_group_count: a count window over the per-group offsets
+    # frame — ≤ max_groups rows when the contract holds (raise_error
+    # fires otherwise), never over data-sized input. The data-sized
+    # window these keys replaced is exactly what grouped_rank exists
+    # to avoid. pack_sequences also keeps global_cumsum's triangular
+    # (pid → offset) broadcast join — num_partitions rows, constant
+    # in data size (sort_global shape).
+    "win_cume": {"single_partition_window"},
+    "win_distribution": {"single_partition_window"},
     "pack_sequences": {"nested_loop", "single_partition_window"},
-    "time_downsample": {"nested_loop", "single_partition_window"},
-    # grouped_percentiles (round-7 rewrite of the exact-percentile
-    # keys off the buffer-everything F.percentile aggregate): rides
-    # grouped_rank and guards its per-group count frame the same way,
-    # so both keys that call it carry exactly the two nodes above.
-    "agg_percentile": {"nested_loop", "single_partition_window"},
-    "agg_winsorize": {"nested_loop", "single_partition_window"},
+    "time_downsample": {"single_partition_window"},
+    # grouped_percentiles (the exact-percentile keys): rides
+    # grouped_rank and guards its per-group count frame the same way.
+    "agg_percentile": {"single_partition_window"},
+    "agg_winsorize": {"single_partition_window"},
 }
 
 
@@ -288,6 +236,7 @@ def audit(key: str, df) -> dict:
         and bool(re.search(r"PushedFilters: \[[^\]]", p)),
         "flags": sorted(flags),
         "unexpected": sorted(flags - ALLOW.get(key, set())),
+        "stale": sorted(ALLOW.get(key, set()) - flags),
     }
 
 
@@ -311,7 +260,7 @@ def main() -> int:
     ap.add_argument("keys", nargs="*")
     args = ap.parse_args()
     spark = get_spark("plan-audit")
-    n_bad = 0
+    n_unexpected = n_stale = n_bad = 0
     metrics: dict[str, dict] = {}
     for key in args.keys or sorted(REGISTRY):
         try:
@@ -319,10 +268,15 @@ def main() -> int:
             metrics[key] = {m: res[m] for m in _METRIC_KEYS}
         except Exception as e:  # noqa: BLE001
             res = {"key": key, "error": f"{type(e).__name__}: {e}"}
-        if res.get("unexpected") or "error" in res:
-            n_bad += 1
+        unexpected, stale = bool(res.get("unexpected")), bool(res.get("stale"))
+        n_unexpected += unexpected
+        n_stale += stale
+        n_bad += unexpected or stale or "error" in res
         print(json.dumps(res))
-    print(f"# {n_bad} keys with unexpected plan flags")
+    print(
+        f"# {n_unexpected} keys with unexpected plan flags, {n_stale} with "
+        f"stale allowances, {n_bad} failing"
+    )
     if args.snapshot:
         with open(args.snapshot, "w") as fh:
             json.dump(metrics, fh, indent=1, sort_keys=True)

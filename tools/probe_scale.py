@@ -72,7 +72,8 @@ PROBES = (
     "llm_bpe_train", "time_holt", "llm_semdedup", "agg_basket_pairs",
     "graph_assortativity", "graph_node_jaccard", "win_bollinger",
     "graph_kcore", "llm_cross_dedup", "emb_mmr", "win_rank",
-    "quota_per_source", "llm_corpus_pipeline",
+    "quota_per_source", "llm_corpus_pipeline", "audit_chisq",
+    "audit_benford", "agg_cuped", "time_pettitt", "time_cusum",
 )
 
 # Key column -> key domain, per table. The columns of one domain shift

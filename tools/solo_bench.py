@@ -5,7 +5,10 @@ Times the given registry keys in one Spark session as bench.py does
 the clock). Each key runs once first, reported as ``first`` and left out
 of the N interleaved reps behind ``median``/``min``/``all``: a key's
 first invocation in the session compiles its plan code and would
-otherwise pull a cold run into the steady-state median. It can
+otherwise pull a cold run into the steady-state median. Rep r starts
+the key list at position r (mod the key count), so no key always
+follows the same keys: its time would otherwise carry what they leave
+behind in the session. It can
 dump `.explain("formatted")` for each key to a directory — the raw
 material for plans/r12/<key>_{before,after}.txt.
 
@@ -57,8 +60,9 @@ def main() -> int:
     if args.reps <= 0:
         return 0
     samples: dict[str, list[float]] = {k: [] for k in args.keys}
-    for _rep in range(args.reps + 1):
-        for key in args.keys:
+    n = len(args.keys)
+    for rep in range(args.reps + 1):
+        for key in args.keys[rep % n :] + args.keys[: rep % n]:
             spark.sparkContext.setJobDescription(f"solo:{key}")
             samples[key].append(
                 bench.time_invocation(spark, REGISTRY[key].fn, args.sf)
