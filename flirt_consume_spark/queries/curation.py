@@ -395,7 +395,9 @@ def audit_chisq(spark: SparkSession, sf_dir: str) -> DataFrame:
     order-dependent — consumers fold the (deterministic) cell table.
     Scale: one hash agg to the 15 contingency cells, coalesced to one
     partition; the marginals and the grand total are windows over it,
-    so nothing after the first agg shuffles."""
+    so nothing after the first agg shuffles. A cell whose priority or
+    status is NULL counts toward the totals but is not emitted, as the
+    oracle's inner equi-joins on the margins drop it."""
     od = t(spark, sf_dir, "orders")
     obs = od.groupBy(
         F.col("o_orderpriority").alias("pri"),
@@ -408,6 +410,7 @@ def audit_chisq(spark: SparkSession, sf_dir: str) -> DataFrame:
         obs.withColumns(
             {"n_row": total("pri"), "n_col": total("status"), "n": total()}
         )
+        .filter(F.col("pri").isNotNull() & F.col("status").isNotNull())
         .select(
             "pri",
             "status",

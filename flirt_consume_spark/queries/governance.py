@@ -897,18 +897,21 @@ def audit_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("digit")
     )
-    tot = F.sum("n").over(Window.partitionBy())
     expected = F.when(F.col("digit") == 1, F.lit(_BENFORD[1]))
     for k in range(2, 10):
         expected = expected.when(F.col("digit") == k, F.lit(_BENFORD[k]))
+    # The total is its own column so the window sits directly on the
+    # coalesced aggregate: selected next to the CASE, it would plan one
+    # more projection (one more class to compile) below the window.
     return (
         d.groupBy("digit")
         .agg(F.count(F.lit(1)).alias("n"))
         .coalesce(1)
+        .withColumn("tot", F.sum("n").over(Window.partitionBy()))
         .select(
             "digit",
             "n",
-            (F.floor(F.col("n").cast("double") / tot * 1e6) / 1e6)
+            (F.floor(F.col("n").cast("double") / F.col("tot") * 1e6) / 1e6)
             .alias("share"),
             expected.alias("expected"),
         )

@@ -146,6 +146,42 @@ def test_chisq_cells_match_scipy_free_formula(spark):
     assert np.allclose(out.contribution, contrib)
 
 
+def test_chisq_null_keys_match_oracle(spark, tmp_path):
+    # Orders with a NULL priority or status count toward the margins
+    # and the grand total but emit no cell: the oracle's inner joins on
+    # the margins drop those cells. Checked on a copy with some NULL
+    # keys of each kind and on the all-NULL edge-sweep mirror.
+    import os
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from flirt_consume_spark.schemas import TABLE_NAMES
+    from flirt_consume_spark.testing import check_key, duck_connect
+    from tools.edge_sweep import make_degenerate
+
+    part = tmp_path / "part"
+    part.mkdir()
+    for name in set(TABLE_NAMES) - {"orders"}:
+        os.symlink(f"{SF}/{name}.parquet", part / f"{name}.parquet")
+    od = pq.read_table(f"{SF}/orders.parquet")
+    i = np.arange(od.num_rows)
+    for col, every in (("o_orderpriority", 3), ("o_orderstatus", 5)):
+        j = od.schema.get_field_index(col)
+        null = pa.nulls(od.num_rows, od.schema.field(j).type)
+        mask = pa.array(i % every == 0)
+        od = od.set_column(j, col, pc.if_else(mask, null, od[col]))
+    pq.write_table(od, part / "orders.parquet")
+    nulls = make_degenerate(SF, str(tmp_path), "nulls")
+    for d in (str(part), nulls):
+        con = duck_connect(d)
+        res = check_key(spark, con, REGISTRY["audit_chisq"], d)
+        con.close()
+        assert res["status"] == "OK", res
+    assert res["rows"] == 0
+
+
 def test_autocorr_matches_numpy(spark):
     ev = load_table(spark, SF, "events").toPandas()
     got = {r["user_id"]: r["autocorr"] for r in REGISTRY["time_autocorr"].fn(spark, SF).collect()}

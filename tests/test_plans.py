@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from flirt_consume_spark.io import load_table
 from flirt_consume_spark.queries import REGISTRY
+from tools.audit_plans import audit
 
 SF = "/root/testdata/sf0.001"
 
@@ -162,6 +163,25 @@ def test_bounded_frame_totals_are_windows(spark, jobs_started, key, max_jobs):
     assert nested == (key == "time_pettitt"), p
     assert "rangepartitioning" not in p and "_pid" not in p, p
     assert n_jobs <= max_jobs, n_jobs
+
+
+def test_audit_flags_partitionless_windows(spark):
+    # The plan audit's single_partition_window flag fires for a Window
+    # without a partition spec, also when coalesce(1) feeds it and no
+    # SinglePartition exchange is planned, and only for such a Window.
+    from pyspark.sql import Window
+
+    df = spark.range(100).withColumn("g", F.col("id") % 3)
+    windows = {
+        Window.partitionBy("g"): [],
+        Window.partitionBy("g").orderBy("id"): [],
+        Window.partitionBy(): ["single_partition_window"],
+        Window.orderBy("id"): ["single_partition_window"],
+    }
+    for w, flags in windows.items():
+        for src in (df, df.coalesce(1)):
+            q = src.withColumn("s", F.sum("id").over(w))
+            assert audit("k", q)["flags"] == flags, plan_of(q)
 
 
 def test_partitioned_sink_scan_prunes_partitions(spark, tmp_path):

@@ -76,22 +76,13 @@ ALLOW = {
     # coverage (llm_editdist: adjacent-pair verify over a 200-doc
     # slice).
     "llm_editdist": {"single_partition_window"},
-    # nested_loop: 1-row corpus-count broadcast for the idf (the
-    # lazy-scalar shape). single_partition_window
-    # is a heuristic false positive here: the flag can't associate
-    # nodes, and this plan contains BOTH a scalar count (whose final
-    # agg is legitimately SinglePartition, 1 row) AND a window that is
-    # hash-partitioned by doc_id — no partition-less window exists
-    # (verified by reading the formatted plan).
-    "llm_tfidf": {"nested_loop", "single_partition_window"},
+    # 1-row corpus-count broadcast for the idf (the lazy-scalar shape).
+    "llm_tfidf": {"nested_loop"},
+    # The rank window over the 50 rows a TakeOrderedAndProject cut
+    # leaves.
+    "llm_vocab": {"single_partition_window"},
     # 1-row min/max bounds broadcast for the Z-curve quantization.
     "sink_zorder": {"nested_loop"},
-    # Heuristic false positive, same shape as llm_tfidf: the plan has
-    # BOTH a user_id-hashpartitioned Window (verified in the formatted
-    # plan) AND a legitimately-SinglePartition 1-row final aggregate;
-    # the flag cannot associate the two nodes.
-    "funnel_steps": {"single_partition_window"},
-    "win_pattern": {"single_partition_window"},
     # 1-row min/max bounds broadcast for bucket assignment.
     "agg_histogram": {"nested_loop"},
     # The dense bloom bitmap rides ONE broadcast row into a
@@ -103,23 +94,17 @@ ALLOW = {
     "graph_triangles": {"nested_loop"},
     # nested_loop: 1-row corpus-total broadcast for the quota
     # arithmetic (lazy-scalar shape). single_partition_window is the
-    # llm_tfidf/funnel_steps heuristic false positive: the plan holds
-    # BOTH a lang-hashpartitioned Window (verified in the formatted
-    # plan: Exchange hashpartitioning(lang) feeds it) AND the count
-    # agg's legitimate 1-row SinglePartition exchange.
+    # grouped_rank _guard_group_count count window over the per-lang
+    # offsets frame (see win_cume below).
     "sample_mixture": {"nested_loop", "single_partition_window"},
     # The per-bucket prefix max is a broadcast triangular join over
     # the |buckets|-row maxima table — constant in data size, the
     # same shape as sort_global's offset prefix-sum.
     "pareto_frontier": {"nested_loop"},
-    # nested_loop: the 1-row grand-total broadcast for the class
-    # boundaries plus global_cumsum's triangular (pid → offset) join —
-    # both constant-size sides (sort_global shape).
-    # single_partition_window is the llm_tfidf heuristic false
-    # positive: the plan holds BOTH the total's legitimate 1-row
-    # SinglePartition agg AND a window hash-partitioned by _pid
-    # (verified in the formatted plan: windowspecdefinition(_pid, ...)).
-    "agg_abc": {"nested_loop", "single_partition_window"},
+    # The 1-row grand-total broadcast for the class boundaries plus
+    # global_cumsum's triangular (pid → offset) join — both
+    # constant-size sides (sort_global shape).
+    "agg_abc": {"nested_loop"},
     # 1-row (N, total_dl) corpus-stats broadcast for the idf/avgdl
     # arithmetic — the same lazy-scalar shape as llm_tfidf.
     "bm25_rank": {"nested_loop"},
@@ -136,34 +121,23 @@ ALLOW = {
     "agg_gini": {"single_partition_window"},
     # 1-row pooled-sigma broadcast for the 3σ flags — lazy scalar.
     "time_seasonal": {"nested_loop"},
-    # nested_loop: the 1-row (n_f, n_o, n_p) totals broadcast crossed
-    # into the ECDF rows + global_cumsum's triangular (pid → offset)
-    # join — both constant-size sides (sort_global shape).
-    # single_partition_window is the llm_tfidf heuristic false
-    # positive: the plan holds the legitimate 1-row SinglePartition
-    # scalar aggs AND a window hash-partitioned by _pid.
-    "audit_ks": {"nested_loop", "single_partition_window"},
+    # The 1-row (n_f, n_o, n_p) totals broadcast crossed into the ECDF
+    # rows + global_cumsum's triangular (pid → offset) join — both
+    # constant-size sides (sort_global shape).
+    "audit_ks": {"nested_loop"},
     # global_rank's triangular (pid → offset) broadcast join —
     # num_partitions rows, constant in data size (sort_global shape).
     "sample_systematic": {"nested_loop"},
-    # Same two findings as audit_ks, same justification: nested_loop
-    # is global_cumsum's triangular (pid → offset) broadcast join
-    # (constant-size side); single_partition_window is the heuristic
-    # false positive — the plan holds the legitimate 1-row
-    # SinglePartition final agg AND a window hash-partitioned by _pid.
-    "audit_mannwhitney": {"nested_loop", "single_partition_window"},
+    # Same as audit_ks: global_cumsum's triangular (pid → offset)
+    # broadcast join (constant-size side).
+    "audit_mannwhitney": {"nested_loop"},
     # global_cumsum's triangular (pid → offset) broadcast join —
     # num_partitions rows, constant in data size (sort_global shape).
     "quota_budget_select": {"nested_loop"},
-    # Same audit_ks shape: nested_loop = global_cumsum's triangular
-    # offsets join + the 1-row positives-total broadcast;
-    # single_partition_window = the heuristic false positive
-    # (legitimate 1-row scalar aggs + a _pid-partitioned window).
-    "eval_pr_curve": {"nested_loop", "single_partition_window"},
-    # Same audit_ks/mannwhitney shape (one multi-counter cumsum +
-    # 1-row scalar aggs): triangular offsets broadcast + the
-    # heuristic window false positive.
-    "eval_auc": {"nested_loop", "single_partition_window"},
+    # Same audit_ks shape: global_cumsum's triangular offsets join +
+    # the 1-row positives-total broadcast.
+    "eval_pr_curve": {"nested_loop"},
+    "eval_auc": {"nested_loop"},
     # 7-row lag table cross-joined into the bounded daily series —
     # constant-size broadcast side by construction.
     "time_crosscorr": {"nested_loop"},
@@ -174,7 +148,17 @@ ALLOW = {
     # shape).
     "time_theilsen": {"nested_loop"},
     "time_mannkendall": {"nested_loop"},
-    "time_pettitt": {"nested_loop"},
+    "time_pettitt": {"nested_loop", "single_partition_window"},
+    # Totals, running sums and peaks as windows over a frame of fixed
+    # size coalesced to one partition: 15 contingency cells (chisq),
+    # 9 digits (benford), 2 arms (cuped), ~80 months (pettitt, above),
+    # 30 days (cusum), 64 dimensions (power iteration, pca).
+    "audit_chisq": {"single_partition_window"},
+    "audit_benford": {"single_partition_window"},
+    "agg_cuped": {"single_partition_window"},
+    "time_cusum": {"single_partition_window"},
+    "emb_power_iteration": {"single_partition_window"},
+    "emb_pca_project": {"single_partition_window"},
     # 1-row order-count broadcast into the ≤C(25,2)-row brand-pair
     # frame (lazy-scalar shape).
     "agg_basket_pairs": {"nested_loop"},
@@ -208,6 +192,9 @@ def _explain(df, mode: str) -> str:
     return buf.getvalue()
 
 
+_WINDOW_ARGS = r"^\(\d+\) Window\nInput \[\d+\]: .*\nArguments: (.*)$"
+
+
 def audit(key: str, df) -> dict:
     p = _explain(df, "formatted")
     flags = set()
@@ -215,15 +202,15 @@ def audit(key: str, df) -> dict:
         flags.add("cartesian")
     if "BroadcastNestedLoopJoin" in p:
         flags.add("nested_loop")
-    # A Window evaluated over a single partition serializes the stage.
-    # Requires an actual Window node: a SinglePartition exchange alone
-    # is also the (fine, 1-row) shape of every scalar aggregate.
-    if (
-        "Arguments: SinglePartition" in p
-        and re.search(r"^\(\d+\) Window", p, re.M)
-        and "TakeOrderedAndProject" not in p
-    ):
-        flags.add("single_partition_window")
+    # A Window evaluated over a single partition serializes the stage:
+    # any Window with no partition spec, whether Spark plans a
+    # SinglePartition exchange below it or its input is coalesce(1)-ed.
+    # Its arguments print as [window exprs], [partition spec], [order
+    # spec], each list only when non-empty; an order spec ends in NULLS.
+    for args in re.findall(_WINDOW_ARGS, p, re.M):
+        n = args.count("], [")
+        if n == 0 or n == 1 and args.endswith(("NULLS FIRST]", "NULLS LAST]")):
+            flags.add("single_partition_window")
     return {
         "key": key,
         "exchanges": len(re.findall(r"^\(\d+\) Exchange", p, re.M)),
