@@ -7,9 +7,11 @@ Prints ONE JSON line:
 
 "queries" is the per-key MEDIAN across reps; "queries_first" is the
 rep-1 time. Every rep runs cold (the CacheManager is cleared before
-each invocation, see below), so rep 1 differs from later reps only by
-noise; the field stays so artifacts from before round 13, when reps
-2+ could hit session-cached intermediates, remain comparable.
+each invocation, see below). Rep 1 still compiles each key's generated
+classes; later reps reuse them, because `get_spark` sizes Spark's
+codegen cache to hold the whole registry. The field stays so artifacts
+from before round 13, when reps 2+ could hit session-cached
+intermediates, remain comparable.
 
 Materialization uses the noop sink (full execution on executors, no
 driver-side row transfer), so timings measure the query plan, not

@@ -22,6 +22,8 @@ FIXTURES.md §B-shaped tables for tests and the rows-only query key.
 
 from __future__ import annotations
 
+import datetime
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -208,10 +210,20 @@ def destination_distribution(
     destination, so its size is bounded by the airport count at any
     scale; Spark's "No Partition Defined for Window operation" warning
     is expected here. The plan stays lazy, and an empty window yields
-    zero rows, not NULL probabilities."""
+    zero rows, not NULL probabilities.
+
+    `start` and `end` are ISO dates (`YYYY-MM-DD`); a malformed or
+    impossible date raises `ValueError` before any Spark work. The
+    window is compared as the ISO string of `leg_date`, not as a date:
+    Spark writes a date literal into its generated Java, so every new
+    window would compile its own classes, while a string literal is
+    passed by reference and every window reuses one cached class. ISO
+    strings sort as their dates do."""
+    lo = datetime.date.fromisoformat(start).isoformat()
+    hi = datetime.date.fromisoformat(end).isoformat()
     window = legs.filter(
         (F.col("orig") == origin)
-        & F.col("leg_date").between(start, end)
+        & F.col("leg_date").cast("string").between(lo, hi)
     )
     by_dest = window.groupBy("dest").agg(F.sum("seats").alias("seats"))
     total = F.sum("seats").over(Window.partitionBy())

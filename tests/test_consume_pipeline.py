@@ -159,3 +159,28 @@ def test_lookup_starts_at_most_two_jobs(sunk_legs, jobs_started):
     )
     assert rows
     assert n_jobs <= 2, n_jobs
+
+
+def test_new_lookup_window_compiles_nothing(spark, sunk_legs):
+    """The window bounds reach generated code as string literals, which
+    Spark passes by reference: a second, unseen window on the same
+    origin runs the classes the first one compiled."""
+    compiles = (
+        spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    )
+    origin = _busiest_origin(sunk_legs)
+    assert destination_distribution(sunk_legs, origin, "2024-01-01", "2024-03-31").collect()
+    before = compiles.getCount()
+    assert destination_distribution(sunk_legs, origin, "2024-02-03", "2024-02-17").collect()
+    assert compiles.getCount() - before == 0
+
+
+@pytest.mark.parametrize("bad", ["2024-13-01", "2024/01/05"])
+def test_lookup_rejects_malformed_bound(sunk_legs, jobs_started, bad):
+    origin = _busiest_origin(sunk_legs)
+    for start, end in ((bad, "2024-03-31"), ("2024-01-01", bad)):
+        def build():
+            with pytest.raises(ValueError):
+                destination_distribution(sunk_legs, origin, start, end)
+
+        assert jobs_started(build) == 0

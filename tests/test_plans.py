@@ -67,8 +67,14 @@ def test_expansion_is_narrow(spark):
 
 
 def test_session_confs_applied(spark):
+    from pyspark.errors.utils import is_debugging_enabled
+
     assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    # Build-time confs: no call-site capture per Column call, and a
+    # generated-code cache that holds the registry's classes.
+    assert is_debugging_enabled() is False
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "10000"
 
 
 def test_vocab_topk_avoids_global_sort(spark):

@@ -5,7 +5,10 @@ Times the given registry keys in one Spark session as bench.py does
 the clock). Each key runs once first, reported as ``first`` and left out
 of the N interleaved reps behind ``median``/``min``/``all``: a key's
 first invocation in the session compiles its plan code and would
-otherwise pull a cold run into the steady-state median. Rep r starts
+otherwise pull a cold run into the steady-state median. ``compiles``
+counts the classes Spark's code generator compiled during a key's
+timed reps (``CodegenMetrics``), so a per-call recompile shows as a
+count, not only as time. Rep r starts
 the key list at position r (mod the key count), so no key always
 follows the same keys: its time would otherwise carry what they leave
 behind in the session. It can
@@ -59,14 +62,21 @@ def main() -> int:
 
     if args.reps <= 0:
         return 0
+    compile_count = (
+        spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount
+    )
     samples: dict[str, list[float]] = {k: [] for k in args.keys}
+    compiles = dict.fromkeys(args.keys, 0)
     n = len(args.keys)
     for rep in range(args.reps + 1):
         for key in args.keys[rep % n :] + args.keys[: rep % n]:
             spark.sparkContext.setJobDescription(f"solo:{key}")
+            before = compile_count()
             samples[key].append(
                 bench.time_invocation(spark, REGISTRY[key].fn, args.sf)
             )
+            if rep:
+                compiles[key] += compile_count() - before
             spark.sparkContext.setJobDescription(None)
     out = {}
     for key, (first, *vals) in samples.items():
@@ -75,6 +85,7 @@ def main() -> int:
             "median": round(statistics.median(vals), 3),
             "min": round(min(vals), 3),
             "all": [round(v, 3) for v in vals],
+            "compiles": compiles[key],
         }
     print(json.dumps({"sf": args.sf, "loadavg": list(os.getloadavg()), "keys": out}, indent=1))
     return 0
